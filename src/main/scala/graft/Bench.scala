@@ -56,6 +56,16 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"${jsonStr(sfDir)}","passes":2,"cpus":"${jsonStr(cpus)}","filter":$filterStamp,"ts":"${jsonStr(ts)}","host":"${jsonStr(host)}","load_before":"${jsonStr(loadBefore)}","load_after":"${jsonStr(loadAfter)}"}"""
   }
 
+  /** Seconds `run` took, or the -1 "measurement invalid" sentinel if it
+    * threw: a crashing query must never read as a fast one (its elapsed
+    * time up to the throw is not a timing). min-of-2 keeps the sentinel,
+    * and BenchGuard rejects it. */
+  private[graft] def timed(run: => Any): Double = {
+    val t0 = System.nanoTime()
+    try { run; (System.nanoTime() - t0) / 1e9 }
+    catch { case _: Throwable => -1.0 }
+  }
+
   def main(args: Array[String]): Unit = {
     // stamp BEFORE the session/warm-up spin up our own 32 threads: the
     // before-value is the NEIGHBOR load diagnosis (a high load_before
@@ -97,9 +107,7 @@ object Bench {
       .filter { case (n, _) => filter.forall(_.findFirstIn(n).isDefined) }
       .sortBy { case (n, _) => (rank.getOrElse(n.head, 9), n) }
     def pass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> timed(fn(spark, sfDir).count())
     }
     // min-of-2: this host's neighbor steal inflates single-shot timings
     // up to ~2×; the per-query min of two full passes is the robust

@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
  * THE one place the engine-session configuration lives (r18, verdict
  * item: the timed configuration and the engine configuration must be
  * the same thing). Every main that builds a session — Bench, Verify,
- * Explain, StageProfile, TimeQuery, ScaleDryRun — routes its builder
- * through [[apply]]; master/parallelism stay with the caller (the
- * bench contract reads `$SPARK_GRAFT_CPUS`, Explain pins local[4]).
+ * Explain, StageProfile, TimeQuery, ScaleDryRun — and the test suites'
+ * shared session route their builder through [[apply]];
+ * master/parallelism stay with the caller (the bench contract reads
+ * `$SPARK_GRAFT_CPUS`, Explain pins local[4]).
  *
  * The settings, with their reasons:
  *  - UTC session timezone — the oracle compares naive timestamps.
@@ -30,6 +31,16 @@ import org.apache.spark.sql.SparkSession
  *    inferred IsNotNull/constraint pushdowns prune real data.
  *  - shuffle/checkpoint scratch on tmpfs — the shared host's disk
  *    stalls under neighbor I/O and parks executor threads.
+ *  - `fs.file.impl` = [[graft.sinks.ForkFreeLocalFileSystem]] — without
+ *    libhadoop, Hadoop's local file system forks a `chmod` process for
+ *    every file and directory a write creates: JFR counted 581 `chmod`
+ *    `jdk.ProcessStart` events over the 13 daily-DAG days of one
+ *    weather_daily benchmark run (about 45 a day, 4-core Linux host).
+ *    The engine class sets the same POSIX bits through `java.nio`, so a
+ *    `file:` write forks nothing (0 in the same run).
+ *    REMOVAL CONDITION: libhadoop's NativeIO is present on every host
+ *    (the stock class does not fork there), or no store root is a
+ *    `file:` path.
  */
 object SessionDefaults {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
@@ -39,4 +50,5 @@ object SessionDefaults {
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
     .config("spark.sql.constraintPropagation.enabled", "false")
     .config("spark.local.dir", "/dev/shm/spark-local")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.sinks.ForkFreeLocalFileSystem].getName)
 }

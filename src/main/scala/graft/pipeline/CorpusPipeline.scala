@@ -165,6 +165,9 @@ object CorpusPipeline {
         else Dedup.jaccardPairsExact(hs, jaccard)
       val comps = Dedup.connectedComponents(
         pairs.select(col("doc_a"), col("doc_b")))
+      // both pair stages return a persisted frame; the components are
+      // eager (collected or checkpointed), so nothing downstream reads it
+      pairs.unpersist()
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
       val keep = exact.select(col("doc_id"), col("n_chars"))
         .join(comps, Seq("doc_id"), "left")

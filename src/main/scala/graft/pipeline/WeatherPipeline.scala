@@ -22,6 +22,11 @@ import graft.sources.Sources
  * parallelism); the join is a broadcast inner join instead of shipping
  * SQL to Postgres; every exchange stays distributed — the reference's
  * full driver materialization between stages (SURVEY.md §4.1) is dropped.
+ *
+ * The two operational stores are engine-written, so every read of them
+ * binds the schema declared in [[Schemas]] (the rule in [[Sources]]):
+ * inference would cost one footer-reading Spark job per store per day.
+ * WeatherPipelineSpec pins each declaration to what the writers write.
  */
 class WeatherPipeline(spark: SparkSession, root: String) {
 
@@ -67,8 +72,8 @@ class WeatherPipeline(spark: SparkSession, root: String) {
    * projection in the reference's export order. Dimension side broadcast.
    */
   def joined(): DataFrame = {
-    val weather = spark.read.parquet(weatherStorePath)
-    val lookup = spark.read.parquet(lookupStorePath)
+    val weather = spark.read.schema(Schemas.weatherRecord).parquet(weatherStorePath)
+    val lookup = spark.read.schema(Schemas.cityLookup).parquet(lookupStorePath)
     Relational.lookupJoin(weather, lookup, "city")
       .select(Schemas.finalWeatherCsvOrder.map(org.apache.spark.sql.functions.col): _*)
   }
@@ -105,11 +110,12 @@ class WeatherPipeline(spark: SparkSession, root: String) {
     * any-Hadoop-visible-FS posture. */
   def reset(): Unit = {
     import org.apache.hadoop.fs.Path
-    for (p <- Seq(weatherStorePath, lookupStorePath)) {
+    for ((p, schema) <- Seq(weatherStorePath -> Schemas.weatherRecord,
+                            lookupStorePath -> Schemas.cityLookup)) {
       val dir = new Path(p)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(dir)) {
-        Relational.truncate(spark.read.parquet(p), p + "_empty")
+        Relational.truncate(spark.read.schema(schema).parquet(p), p + "_empty")
         fs.delete(dir, true)
         fs.rename(new Path(p + "_empty"), dir)
       }

@@ -77,14 +77,15 @@ object Sinks {
    * weather_etl_pipeline.py:265-266) as a driver-side wrapper. Note the
    * reference's retry double-inserts on partial failure (SURVEY.md §2.1);
    * pair this with overwrite-per-partition writes for idempotency
-   * (SURVEY.md §7.3#5).
+   * (SURVEY.md §7.3#5). Only non-fatal failures are retried: an OOM, a
+   * linkage error or an interrupt propagates on its first throw.
    */
   def withRetry[T](retries: Int = 1, delayMs: Long = 3000)(body: => T): T = {
     var attempt = 0
     while (true) {
       try return body
       catch {
-        case e: Throwable if attempt < retries =>
+        case scala.util.control.NonFatal(_) if attempt < retries =>
           attempt += 1
           Thread.sleep(delayMs)
       }

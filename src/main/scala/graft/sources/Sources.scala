@@ -13,6 +13,13 @@ import org.apache.spark.sql.types.StructType
  * binding mode, coercion behavior) is preserved over local files; real
  * connectors (s3a://, JDBC, spark-bigquery-connector) drop in by changing
  * only the path/format, not operator code.
+ *
+ * Schema rule: a store the engine writes itself is read back with the
+ * schema it was written with, as declared in [[graft.model.Schemas]]
+ * (`spark.read.schema(...)`, as `WeatherPipeline` reads its operational
+ * stores). Schema inference costs one footer-reading Spark job per read
+ * and is only for foreign inputs whose schema the engine does not own,
+ * such as the harness tables of [[table]].
  */
 object Sources {
 

@@ -110,6 +110,16 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(BenchGuard.check(2.5, Map("q01" -> 0.5, "d09" -> 2.0), base, 130.0).isEmpty)
   }
 
+  test("a throwing query is timed as the -1 sentinel, and the gate fails on it") {
+    val t = Bench.timed(throw new RuntimeException("query failed"))
+    assert(t == -1.0)
+    assert(Bench.timed(()) >= 0.0)
+    val base = Map("q01" -> 0.5, "d09" -> 2.0)
+    val run = Map("q01" -> t, "d09" -> 2.0)
+    assert(BenchGuard.check(run.values.sum, run, base, 130.0)
+      .exists(_.contains("INVALID measurement (negative sentinel): q01")))
+  }
+
   test("the committed baseline parses and covers the full query surface") {
     val (total, qs) = BenchGuard.load("bench_baseline.json")
     assert(total > 0 && total <= 130.0,

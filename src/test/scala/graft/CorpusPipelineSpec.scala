@@ -69,6 +69,21 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(scan.contains("PartitionFilters"), s"expected partition pruning:\n$scan")
   }
 
+  test("run + write release every cache they persist, in both pair-stage modes") {
+    val sc = spark.sparkContext
+    // a plan no other test runs: a frame it persists cannot alias a cache
+    // an earlier run left behind (persisting an already-cached plan is a
+    // no-op, which would hide the leak)
+    val input = docs.filter(col("doc_id") =!= -1L)
+    for (lsh <- Seq(false, true)) {
+      val before = sc.getPersistentRDDs.keySet
+      val root = java.nio.file.Files.createTempDirectory("graft_corpus_rel").toString
+      CorpusPipeline.write(CorpusPipeline.run(input, lshPairs = lsh), root + "/corpus")
+      assert(sc.getPersistentRDDs.keySet == before,
+        s"lshPairs=$lsh left persisted RDDs: ${sc.getPersistentRDDs.keySet -- before}")
+    }
+  }
+
   test("LSH pair-stage mode produces the SAME corpus as the exact pair " +
        "stage (recall parity at feasible scale)") {
     val viaLsh = CorpusPipeline.run(docs, lshPairs = true)

@@ -104,4 +104,21 @@ class GoldenPipelineSpec extends AnyFunSuite {
       graft.sinks.Sinks.withRetry(retries = 1, delayMs = 1) { sys.error("always") }
     }
   }
+
+  test("op 17 retry wrapper: a fatal error propagates on its first throw; a non-fatal one is retried once") {
+    for (fatal <- Seq[Throwable](new OutOfMemoryError("heap"), new InterruptedException())) {
+      var calls = 0
+      val thrown = intercept[Throwable] {
+        graft.sinks.Sinks.withRetry(retries = 1, delayMs = 0) { calls += 1; throw fatal }
+      }
+      assert((thrown eq fatal) && calls == 1, s"$fatal was retried")
+    }
+    var calls = 0
+    intercept[IllegalStateException] {
+      graft.sinks.Sinks.withRetry(retries = 1, delayMs = 0) {
+        calls += 1; throw new IllegalStateException("transient")
+      }
+    }
+    assert(calls == 2)
+  }
 }

@@ -70,11 +70,15 @@ class SourcesSpec extends AnyFunSuite {
     val a = src.orderBy(col("doc_id")).collect()
     val b = back.orderBy(col("doc_id")).collect()
     assert(a.sameElements(b))
-    // filters reach the ORC scan just as they do on parquet
-    val plan = back.filter(col("doc_id") === 7L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,7)"),
-      s"expected pushed filter in:\n$plan")
+    // filters reach the ORC scan just as they do on parquet: the same
+    // pushed-filter list, whatever the session's constraint inference adds
+    def pushed(df: org.apache.spark.sql.DataFrame): String = {
+      val plan = df.filter(col("doc_id") === 7L).queryExecution.executedPlan.toString
+      "PushedFilters: \\[[^\\]]*\\]".r.findFirstIn(plan)
+        .getOrElse(fail(s"no pushed filters in:\n$plan"))
+    }
+    assert(pushed(back).contains("EqualTo(doc_id,7)"), pushed(back))
+    assert(pushed(back) == pushed(src))
   }
 
   test("Avro round-trip: schema, values, and pushdown — skipped when the " +

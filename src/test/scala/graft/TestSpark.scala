@@ -3,26 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (startup is the dominant test
-  * cost; Spark query execution is thread-safe across parallel suites). */
+  * cost; Spark query execution is thread-safe across parallel suites).
+  * Built through [[SessionDefaults]], so the suites run the engine's own
+  * configuration; only the test-sized settings are added here. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = SessionDefaults(SparkSession.builder())
       .master("local[4]")
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed-table tests write catalog tables; keep the warehouse
       // (and its lifetime) on tmpfs, not in the repo tree
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // AQE coalescing targets bytes; text/similarity stages carry few MB
-      // but heavy per-row CPU, so keep their exchanges parallel
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // shuffle/checkpoint scratch on tmpfs: the shared host's disk
-      // stalls under neighbor I/O and parks executor threads
-      .config("spark.local.dir", "/dev/shm/spark-local")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
