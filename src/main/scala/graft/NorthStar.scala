@@ -105,6 +105,18 @@ object NorthStar {
   /** [[sqlToksOf]] over the `text` column (the common case). */
   private val sqlToks = sqlToksOf("text")
 
+  /** DuckDB twin of [[TF.qualityKeep]] over `text` — the one oracle form
+    * of the t06 rule, embedded by the t06, d13 and d26 oracles. */
+  private val t06Sql =
+    s"""CAST(len($sqlToks) AS INT) >= 5
+            AND CAST(length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS DOUBLE)
+                / greatest(length(text), 1) <= 0.2
+            AND CAST(len(list_filter($sqlToks,
+                 x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
+                / greatest(len($sqlToks), 1) >= 0.01
+            AND CAST(len(list_distinct($sqlToks)) AS DOUBLE)
+                / greatest(len($sqlToks), 1) >= 0.3"""
+
   /** Pseudonymization key for t36 — embedded verbatim in the oracle, so
     * it must stay ASCII (fnvSql folds per-char ord as the byte). */
   private val piiKey = "graft-pii-k13"
@@ -1018,6 +1030,48 @@ object NorthStar {
         ORDER BY score DESC, a.vec_id LIMIT 10"""
   }
 
+  /** d13/d26: [[graft.pipeline.CorpusPipeline.verdictStages]] over the
+    * raw documents, every document labeled with the first stage whose
+    * keep-list lacks it. Each stage's doc_ids are a tracked checkpoint
+    * (ids only, never text), and the next stage's pool is the documents
+    * semi-joined with it: each list is read by that pool AND by its
+    * label join, and without a barrier each read re-runs its whole
+    * lineage (d16 re-runs this body once more for its release join).
+    * Near-dup components come from the MEMOIZED corpus pair set
+    * restricted to the pool — Jaccard is pool-independent, so that is
+    * the pool's pair set, with no fresh PPJoin run. */
+  private def dedupVerdict(s: SparkSession, dir: String, lmGate: Boolean): DataFrame = {
+    val d = docs(s, dir)
+    def poolComponents(pool: DataFrame): DataFrame = {
+      val ids = pool.select(col("doc_id"))
+      graft.operators.Dedup.connectedComponents(neardupPairs(s, dir)
+        .join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
+        .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+        .select(col("doc_a"), col("doc_b")))
+    }
+    val keeps = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
+    graft.pipeline.CorpusPipeline.verdictStages(d, "src0", lmGate, poolComponents,
+      (name, pool) => {
+        val keep = graft.Checkpoints.tracked(pool.select(col("doc_id")))
+        keeps += name -> keep
+        d.join(keep, Seq("doc_id"), "left_semi")
+      })
+    val dropLabel = Map(
+      "quality_filter" -> lit("dropped_quality"),
+      "lm_fluency" -> lit("dropped_fluency"),
+      "exact_dedup" -> lit("dropped_exact"),
+      "neardup_dedup" -> lit("dropped_near"),
+      "decontaminate" -> when(col("source") === "src0", "dropped_eval")
+        .otherwise("dropped_contaminated"))
+    val flagged = keeps.zipWithIndex.foldLeft(d.select(col("doc_id"), col("source"))) {
+      case (acc, ((_, keep), i)) => acc.join(keep.withColumn(s"f$i", lit(1)), Seq("doc_id"), "left")
+    }
+    flagged.select(col("doc_id"),
+      keeps.zipWithIndex.foldRight(lit("kept")) { case (((name, _), i), kept) =>
+        when(col(s"f$i").isNull, dropLabel(name)).otherwise(kept)
+      }.as("verdict"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // -- deduplication --------------------------------------------------
@@ -1531,95 +1585,13 @@ object NorthStar {
     "d12_containment_pairs" -> ((s, dir) =>
       graft.operators.Dedup.containmentPairs(hsTable(s, dir), 0.8)),
 
-    // the dedup-pipeline VERDICT table — CorpusPipeline's staged
-    // composition (quality → exact → near-dup → eval/contamination)
-    // surfaced as one labeled, ORACLE-CHECKED result: every document and
-    // the stage that dropped it (or 'kept'). This hash-verifies the
-    // pipeline's end-to-end semantics cross-engine, not just each stage
-    // alone — the audit trail a production dedup run ships next to its
-    // output corpus. Stage order matters and is replicated exactly: each
-    // stage's pool is the previous stage's survivors.
-    "d13_dedup_verdict" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // stage 1: quality (t06 rules). NOT a bare filter over the inline
-      // feature projection: a deterministic predicate pushes through
-      // docs()'s pinned repartition with the projection's aliases
-      // inlined (PushPredicateThroughNonJoin), landing the whole
-      // per-doc feature compute on the corpus file's single split —
-      // measured ~250 ms on ONE task per derivation, twice per run
-      // (projections stay above the pin; filters do not). The
-      // unique-key aggregate is a pushdown BARRIER (predicates on agg
-      // outputs stay above it) that rides the spread's hash(doc_id)
-      // partitioning — the gate computes 32-way with no extra
-      // exchange. (A persisted quality memo was measured WORSE: the
-      // cache boundary turned the broadcast-sized keep lists into six
-      // scheduling-bound 4.4k-row exchanges across d13/d16.)
-      // Keep-list localCheckpoints (d26's within-plan stage sharing),
-      // RE-MEASURED r18 after the r17 pair-build/LM changes cheapened
-      // the inputs (the verdict's "the trade moved" retry): r17 had
-      // measured this WORSE here (stage time 1.26→3.30 s); on the r18
-      // tree the d13+d16 pair is consistently ~0.6-0.7 s BETTER with
-      // the checkpoints (mins across 3 runs/side: d13 2.18→2.35 pays
-      // the eager materializations, d16 — which re-runs this body plus
-      // the t27 gate — drops 2.56→1.92), because d16's composition
-      // re-executes every keep list's lineage per verdict-label join
-      // leg. Family net negative, identical hashes (checkpointing
-      // changes materialization, never values).
-      val qKeep = d.select(col("doc_id") +: TF.qualityColumns(col("text")): _*)
-        .groupBy(col("doc_id"))
-        .agg(max(col("n_tokens") >= 5 && col("punct_ratio") <= 0.2 &&
-          col("stopword_ratio") >= 0.01 && col("ttr") >= 0.3).as("keepq"))
-        .filter(col("keepq")).select(col("doc_id"))
-        .localCheckpoint()
-      val pool1 = d.join(qKeep, Seq("doc_id"), "left_semi")
-      // stage 2: exact dedup among quality survivors
-      val eKeep = pool1.select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-        .localCheckpoint()
-      val pool2 = pool1.join(eKeep, Seq("doc_id"), "left_semi")
-      // stage 3: near-dup representative among exact survivors. Pairwise
-      // Jaccard is pool-independent, so the pool's pair set is exactly
-      // the MEMOIZED corpus pair set restricted to pairs with both
-      // endpoints in the pool — two semi-joins over the persisted table,
-      // not a fresh PPJoin run (which would also leak its internal
-      // persist: d03's machinery is memoized for precisely this reuse)
-      val pool2Ids = pool2.select(col("doc_id"))
-      val poolPairs = neardupPairs(s, dir)
-        .join(pool2Ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-        .join(pool2Ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-      val comps = graft.operators.Dedup.connectedComponents(
-        poolPairs.select(col("doc_a"), col("doc_b")))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-      val nKeep = pool2.select(col("doc_id"), col("n_chars"))
-        .join(comps, Seq("doc_id"), "left")
-        .withColumn("component", coalesce(col("component"), col("doc_id")))
-        .withColumn("rn", row_number().over(
-          w.orderBy(col("n_chars").desc, col("doc_id"))))
-        .filter(col("rn") === 1).select(col("doc_id"))
-        .localCheckpoint()
-      val pool3 = pool2.join(nKeep, Seq("doc_id"), "left_semi")
-      // stage 4: eval exclusion + contamination among near-dup survivors
-      val evalSet = d.filter(col("source") === "src0")
-        .select(explode(Hashing.shingleHashSet(TF.tokens(col("text")), 5)).as("s"))
-        .distinct()
-      val contaminated = pool3.filter(col("source") =!= "src0")
-        .select(col("doc_id"),
-          explode(Hashing.shingleHashSet(TF.tokens(col("text")), 5)).as("s"))
-        .join(broadcast(evalSet), Seq("s"), "left_semi")
-        .select(col("doc_id")).distinct()
-      d.select(col("doc_id"), col("source"))
-        .join(qKeep.withColumn("fq", lit(1)), Seq("doc_id"), "left")
-        .join(eKeep.withColumn("fe", lit(1)), Seq("doc_id"), "left")
-        .join(nKeep.withColumn("fn", lit(1)), Seq("doc_id"), "left")
-        .join(contaminated.withColumn("fc", lit(1)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("fq").isNull, "dropped_quality")
-            .when(col("fe").isNull, "dropped_exact")
-            .when(col("fn").isNull, "dropped_near")
-            .when(col("source") === "src0", "dropped_eval")
-            .when(col("fc").isNotNull, "dropped_contaminated")
-            .otherwise("kept").as("verdict"))
-    }),
+    // the dedup-pipeline VERDICT table — CorpusPipeline's staged chain
+    // (quality → exact → near-dup → eval/contamination) surfaced as one
+    // labeled, ORACLE-CHECKED result: every document and the stage that
+    // dropped it (or 'kept'). This hash-verifies the pipeline's
+    // end-to-end semantics cross-engine, not just each stage alone — the
+    // audit trail a production dedup run ships next to its output corpus.
+    "d13_dedup_verdict" -> ((s, dir) => dedupVerdict(s, dir, lmGate = false)),
 
     // the RELEASE manifest — what actually ships: d13's rule-based
     // verdict pipeline composed with t27's model-based quality gate
@@ -1636,96 +1608,14 @@ object NorthStar {
           .select(col("doc_id"), col("score")), Seq("doc_id"))
     }),
 
-    // d13's staged verdict composition with the t39 LM-fluency gate
-    // wired in as a quality stage — the CCNet ordering: heuristic
-    // quality → LM perplexity filter → dedup → decontamination. The
-    // fluency stage calls THE SAME operators/LmFluency.score body the
+    // d13's verdict with the chain's t39 LM-fluency gate on — the CCNet
+    // ordering: heuristic quality → LM perplexity filter → dedup →
+    // decontamination. The gate runs THE SAME LmFluency.score body the
     // oracle-verified t39 runs (and the oracle embeds t39's verified
-    // SQL), so the composition cannot drift from its stages. LM trained
-    // on the FULL src0 reference slice (the reference is given, not
-    // quality-gated — t39's contract); only quality-surviving non-src0
-    // docs face the gate, src0 rows bypass it (they are the reference,
-    // and leave at the eval-exclusion stage). Distributed shape: the
-    // fluency stage adds ONE map-side broadcast-scored explode plus a
-    // doc_id-keyed agg to d13's plan — no new corpus-sized shuffle.
-    "d26_verdict_lm" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // WITHIN-QUERY stage sharing (r16 verdict #5, measured): every
-      // keep list below is consumed at least twice — once by the next
-      // pool stage and once by its verdict-label join leg — and without
-      // a barrier each consumption re-executes the list's FULL lineage
-      // (the nKeep leg alone re-ran quality agg + LM scoring + exact
-      // dedup + components). localCheckpoint of each keep list (tiny:
-      // doc_id lists — the 100 TB footprint is ids, never text)
-      // materializes each expensive stage ONCE; AQE re-plans the
-      // downstream joins off the checkpoints' ACTUAL sizes, so the
-      // broadcast shapes survive. d13 measured a PERSISTED quality memo
-      // worse across queries (cross-query cache churn) — this is the
-      // within-plan form the bench contract allows.
-      // stage 1: quality (d13's gate, same pushdown-barrier shape)
-      val qKeep = d.select(col("doc_id") +: TF.qualityColumns(col("text")): _*)
-        .groupBy(col("doc_id"))
-        .agg(max(col("n_tokens") >= 5 && col("punct_ratio") <= 0.2 &&
-          col("stopword_ratio") >= 0.01 && col("ttr") >= 0.3).as("keepq"))
-        .filter(col("keepq")).select(col("doc_id"))
-        .localCheckpoint()
-      val pool1 = d.join(qKeep, Seq("doc_id"), "left_semi")
-      // stage 2: LM-fluency gate (t39's body via LmFluency.score)
-      val fKeep = graft.operators.LmFluency.score(
-          d.filter(col("source") === "src0").select(col("text")),
-          pool1.filter(col("source") =!= "src0")
-            .select(col("doc_id"), col("text")))
-        .filter(col("keep")).select(col("doc_id"))
-        .unionByName(pool1.filter(col("source") === "src0")
-          .select(col("doc_id")))
-        .localCheckpoint()
-      val pool2 = pool1.join(fKeep, Seq("doc_id"), "left_semi")
-      // stage 3: exact dedup among fluency survivors
-      val eKeep = pool2.select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-        .localCheckpoint()
-      val pool3 = pool2.join(eKeep, Seq("doc_id"), "left_semi")
-      // stage 4: near-dup representative — the memoized corpus pair set
-      // restricted to the pool (d13's reuse discipline)
-      val pool3Ids = pool3.select(col("doc_id"))
-      val poolPairs = neardupPairs(s, dir)
-        .join(pool3Ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-        .join(pool3Ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-      val comps = graft.operators.Dedup.connectedComponents(
-        poolPairs.select(col("doc_a"), col("doc_b")))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-      val nKeep = pool3.select(col("doc_id"), col("n_chars"))
-        .join(comps, Seq("doc_id"), "left")
-        .withColumn("component", coalesce(col("component"), col("doc_id")))
-        .withColumn("rn", row_number().over(
-          w.orderBy(col("n_chars").desc, col("doc_id"))))
-        .filter(col("rn") === 1).select(col("doc_id"))
-        .localCheckpoint()
-      val pool4 = pool3.join(nKeep, Seq("doc_id"), "left_semi")
-      // stage 5: eval exclusion + contamination among near-dup survivors
-      val evalSet = d.filter(col("source") === "src0")
-        .select(explode(Hashing.shingleHashSet(TF.tokens(col("text")), 5)).as("s"))
-        .distinct()
-      val contaminated = pool4.filter(col("source") =!= "src0")
-        .select(col("doc_id"),
-          explode(Hashing.shingleHashSet(TF.tokens(col("text")), 5)).as("s"))
-        .join(broadcast(evalSet), Seq("s"), "left_semi")
-        .select(col("doc_id")).distinct()
-      d.select(col("doc_id"), col("source"))
-        .join(qKeep.withColumn("fq", lit(1)), Seq("doc_id"), "left")
-        .join(fKeep.withColumn("ff", lit(1)), Seq("doc_id"), "left")
-        .join(eKeep.withColumn("fe", lit(1)), Seq("doc_id"), "left")
-        .join(nKeep.withColumn("fn", lit(1)), Seq("doc_id"), "left")
-        .join(contaminated.withColumn("fc", lit(1)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("fq").isNull, "dropped_quality")
-            .when(col("ff").isNull, "dropped_fluency")
-            .when(col("fe").isNull, "dropped_exact")
-            .when(col("fn").isNull, "dropped_near")
-            .when(col("source") === "src0", "dropped_eval")
-            .when(col("fc").isNotNull, "dropped_contaminated")
-            .otherwise("kept").as("verdict"))
-    }),
+    // SQL). Distributed shape: one map-side broadcast-scored explode
+    // plus a doc_id-keyed agg on top of d13's plan — no new corpus-sized
+    // shuffle.
+    "d26_verdict_lm" -> ((s, dir) => dedupVerdict(s, dir, lmGate = true)),
 
     // SimHash near-dup: 64-bit signatures (custom Catalyst expression),
     // byte-banded candidate join (8 bands ⇒ complete for hamming ≤ 7)
@@ -2364,12 +2254,8 @@ object NorthStar {
 
     // quality scoring applied as the filter it exists for: keep/drop
     // verdict per document from the t02 heuristics
-    "t06_quality_filter" -> ((s, dir) => {
-      val q = docs(s, dir).select(col("doc_id") +: TF.qualityColumns(col("text")): _*)
-      q.select(col("doc_id"),
-        (col("n_tokens") >= 5 && col("punct_ratio") <= 0.2 &&
-          col("stopword_ratio") >= 0.01 && col("ttr") >= 0.3).as("keep"))
-    }),
+    "t06_quality_filter" -> ((s, dir) =>
+      docs(s, dir).select(col("doc_id"), TF.qualityKeep(col("text")).as("keep"))),
 
     "t03_lang_id" -> ((s, dir) =>
       docs(s, dir).select(col("doc_id"), TF.langId(col("text")).as("lang_pred"))),
@@ -4244,6 +4130,100 @@ object NorthStar {
        SELECT vec_id, neighbor_id, score FROM fin WHERE rn <= $k"""
   }
 
+  /** The d13/d26 oracle: the verdict chain replayed end-to-end, every
+    * stage's oracle fragment (t06 quality rules, d01/d02 fingerprint min,
+    * d03 pair CTEs, d06 recursive components, d07 representative window,
+    * t12 5-gram decontamination) chained on each stage's survivor pool.
+    * With `lmGate`, t39's verified LM-fluency body sits between the
+    * quality and exact-dedup stages (the CCNet ordering): tk/tr/big/sc
+    * are t39's oracle fragments, the keep gate the same cross-multiplied
+    * integer compare, scored over the quality-survivor pool's non-src0
+    * docs; src0 rows bypass. Unlike t39, the gate needs only
+    * n_trans/n_hit (the keep decision), so t39's ctx/voc fragments —
+    * which feed inv_p_sum alone — are omitted (they were dead joins
+    * here: ctx is unique per w1 and voc one row, no fan-out). */
+  private def verdictOracle(lmGate: Boolean): String = {
+    val fluency =
+      if (!lmGate) "pf AS (SELECT * FROM p1),"
+      else
+        s"""tk AS (SELECT doc_id, source, $sqlToks AS tks FROM documents),
+         tr AS (SELECT doc_id, source,
+                  unnest(list_transform(range(1, len(tks)), i -> tks[i])) AS w1,
+                  unnest(list_transform(range(1, len(tks)), i -> tks[i+1])) AS w2
+                FROM tk WHERE len(tks) >= 2),
+         big AS (SELECT w1, w2, count(*) AS c2 FROM tr
+                 WHERE source = 'src0' GROUP BY 1, 2),
+         sc AS (SELECT tr.doc_id, count(*) AS n_trans,
+                  CAST(SUM(CASE WHEN big.c2 IS NOT NULL THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_hit
+                FROM tr LEFT JOIN big USING (w1, w2)
+                WHERE tr.source <> 'src0'
+                  AND tr.doc_id IN (SELECT doc_id FROM p1)
+                GROUP BY 1),
+         fk AS (SELECT doc_id FROM sc
+                WHERE n_trans > 0 AND n_hit * 4 >= n_trans * 3
+                UNION ALL
+                SELECT doc_id FROM p1 WHERE source = 'src0'),
+         pf AS (SELECT p1.* FROM p1 JOIN fk USING (doc_id)),"""
+    val (fluencyCase, fluencyJoin) =
+      if (lmGate) ("WHEN fk.doc_id IS NULL THEN 'dropped_fluency'",
+        "LEFT JOIN fk ON d.doc_id = fk.doc_id")
+      else ("", "")
+    s"""WITH RECURSIVE
+         q AS (SELECT doc_id FROM documents WHERE $t06Sql),
+         p1 AS (SELECT d.* FROM documents d JOIN q USING (doc_id)),
+         $fluency
+         efp AS (SELECT doc_id, md5(array_to_string($sqlToks, ' ')) AS fp FROM pf),
+         ek AS (SELECT min(doc_id) AS doc_id FROM efp GROUP BY fp),
+         pe AS (SELECT pf.* FROM pf JOIN ek USING (doc_id)),
+         sh AS (SELECT doc_id, unnest($sqlShingles) AS s FROM pe),
+         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+         pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                GROUP BY 1, 2),
+         pairs AS (SELECT doc_a, doc_b FROM pr
+                   JOIN sizes sa ON doc_a = sa.doc_id
+                   JOIN sizes sb ON doc_b = sb.doc_id
+                   WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
+         edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+                   UNION ALL SELECT doc_b, doc_a FROM pairs),
+         reach(src, dst) AS (
+           SELECT src, dst FROM edges
+           UNION
+           SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+         comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
+                  FROM reach GROUP BY src),
+         lab AS (SELECT pe.doc_id, pe.n_chars,
+                        COALESCE(c.component, pe.doc_id) AS component
+                 FROM pe LEFT JOIN comp c USING (doc_id)),
+         nk AS (SELECT doc_id FROM (
+                  SELECT doc_id, row_number() OVER (PARTITION BY component
+                    ORDER BY n_chars DESC, doc_id) AS rn FROM lab)
+                WHERE rn = 1),
+         pn AS (SELECT pe.* FROM pe JOIN nk USING (doc_id)),
+         ev AS (SELECT DISTINCT s FROM (
+                  SELECT unnest(${sqlShinglesN("tks", 5)}) AS s FROM (
+                    SELECT $sqlToks AS tks FROM documents WHERE source = 'src0'))),
+         cont AS (SELECT DISTINCT doc_id FROM (
+                    SELECT doc_id, unnest(${sqlShinglesN("tks", 5)}) AS s FROM (
+                      SELECT doc_id, $sqlToks AS tks FROM pn WHERE source <> 'src0'))
+                  WHERE s IN (SELECT s FROM ev))
+         SELECT d.doc_id,
+                CASE WHEN q.doc_id IS NULL THEN 'dropped_quality'
+                     $fluencyCase
+                     WHEN ek.doc_id IS NULL THEN 'dropped_exact'
+                     WHEN nk.doc_id IS NULL THEN 'dropped_near'
+                     WHEN d.source = 'src0' THEN 'dropped_eval'
+                     WHEN cont.doc_id IS NOT NULL THEN 'dropped_contaminated'
+                     ELSE 'kept' END AS verdict
+         FROM documents d
+         LEFT JOIN q ON d.doc_id = q.doc_id
+         $fluencyJoin
+         LEFT JOIN ek ON d.doc_id = ek.doc_id
+         LEFT JOIN nk ON d.doc_id = nk.doc_id
+         LEFT JOIN cont ON d.doc_id = cont.doc_id"""
+  }
+
   /** All oracle SQL except the compositions that quote other entries —
     * see [[oracles]], which closes over this map. */
   private val oraclesBase: Map[String, String] = Map(
@@ -4767,161 +4747,8 @@ object NorthStar {
                    min(doc_id) OVER (PARTITION BY md5(array_to_string($sqlToks, ' '))) AS keep
             FROM documents)
           WHERE doc_id = keep""",
-    // the staged composition replayed end-to-end: every stage's oracle
-    // fragment (t06 quality rules, d01/d02 fingerprint min, d03 pair
-    // CTEs, d06 recursive components, d07 representative window, t12
-    // 5-gram decontamination) chained on each stage's survivor pool
-    "d13_dedup_verdict" -> {
-      val t06cond =
-        s"""CAST(len($sqlToks) AS INT) >= 5
-            AND CAST(length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS DOUBLE)
-                / greatest(length(text), 1) <= 0.2
-            AND CAST(len(list_filter($sqlToks,
-                 x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                / greatest(len($sqlToks), 1) >= 0.01
-            AND CAST(len(list_distinct($sqlToks)) AS DOUBLE)
-                / greatest(len($sqlToks), 1) >= 0.3"""
-      s"""WITH RECURSIVE
-         q AS (SELECT doc_id FROM documents WHERE $t06cond),
-         p1 AS (SELECT d.* FROM documents d JOIN q USING (doc_id)),
-         efp AS (SELECT doc_id, md5(array_to_string($sqlToks, ' ')) AS fp FROM p1),
-         ek AS (SELECT min(doc_id) AS doc_id FROM efp GROUP BY fp),
-         p2 AS (SELECT p1.* FROM p1 JOIN ek USING (doc_id)),
-         sh AS (SELECT doc_id, unnest($sqlShingles) AS s FROM p2),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-         pairs AS (SELECT doc_a, doc_b FROM pr
-                   JOIN sizes sa ON doc_a = sa.doc_id
-                   JOIN sizes sb ON doc_b = sb.doc_id
-                   WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                   UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach(src, dst) AS (
-           SELECT src, dst FROM edges
-           UNION
-           SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
-                  FROM reach GROUP BY src),
-         lab AS (SELECT p2.doc_id, p2.n_chars,
-                        COALESCE(c.component, p2.doc_id) AS component
-                 FROM p2 LEFT JOIN comp c USING (doc_id)),
-         nk AS (SELECT doc_id FROM (
-                  SELECT doc_id, row_number() OVER (PARTITION BY component
-                    ORDER BY n_chars DESC, doc_id) AS rn FROM lab)
-                WHERE rn = 1),
-         p3 AS (SELECT p2.* FROM p2 JOIN nk USING (doc_id)),
-         ev AS (SELECT DISTINCT s FROM (
-                  SELECT unnest(${sqlShinglesN("tks", 5)}) AS s FROM (
-                    SELECT $sqlToks AS tks FROM documents WHERE source = 'src0'))),
-         cont AS (SELECT DISTINCT doc_id FROM (
-                    SELECT doc_id, unnest(${sqlShinglesN("tks", 5)}) AS s FROM (
-                      SELECT doc_id, $sqlToks AS tks FROM p3 WHERE source <> 'src0'))
-                  WHERE s IN (SELECT s FROM ev))
-         SELECT d.doc_id,
-                CASE WHEN q.doc_id IS NULL THEN 'dropped_quality'
-                     WHEN ek.doc_id IS NULL THEN 'dropped_exact'
-                     WHEN nk.doc_id IS NULL THEN 'dropped_near'
-                     WHEN d.source = 'src0' THEN 'dropped_eval'
-                     WHEN cont.doc_id IS NOT NULL THEN 'dropped_contaminated'
-                     ELSE 'kept' END AS verdict
-         FROM documents d
-         LEFT JOIN q ON d.doc_id = q.doc_id
-         LEFT JOIN ek ON d.doc_id = ek.doc_id
-         LEFT JOIN nk ON d.doc_id = nk.doc_id
-         LEFT JOIN cont ON d.doc_id = cont.doc_id"""
-    },
-    // d13's staged replay with t39's verified LM-fluency body embedded
-    // between the quality and exact-dedup stages (the CCNet ordering):
-    // tk/tr/big/sc are t39's oracle fragments, the keep gate the same
-    // cross-multiplied integer compare, scored over the quality-survivor
-    // pool's non-src0 docs; src0 rows bypass. Unlike t39, the gate here
-    // needs only n_trans/n_hit (the keep decision), so t39's ctx/voc
-    // fragments — which feed inv_p_sum alone — are omitted (they were
-    // dead joins here: ctx is unique per w1 and voc one row, no fan-out)
-    "d26_verdict_lm" -> {
-      val t06cond =
-        s"""CAST(len($sqlToks) AS INT) >= 5
-            AND CAST(length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS DOUBLE)
-                / greatest(length(text), 1) <= 0.2
-            AND CAST(len(list_filter($sqlToks,
-                 x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                / greatest(len($sqlToks), 1) >= 0.01
-            AND CAST(len(list_distinct($sqlToks)) AS DOUBLE)
-                / greatest(len($sqlToks), 1) >= 0.3"""
-      s"""WITH RECURSIVE
-         q AS (SELECT doc_id FROM documents WHERE $t06cond),
-         p1 AS (SELECT d.* FROM documents d JOIN q USING (doc_id)),
-         tk AS (SELECT doc_id, source, $sqlToks AS tks FROM documents),
-         tr AS (SELECT doc_id, source,
-                  unnest(list_transform(range(1, len(tks)), i -> tks[i])) AS w1,
-                  unnest(list_transform(range(1, len(tks)), i -> tks[i+1])) AS w2
-                FROM tk WHERE len(tks) >= 2),
-         big AS (SELECT w1, w2, count(*) AS c2 FROM tr
-                 WHERE source = 'src0' GROUP BY 1, 2),
-         sc AS (SELECT tr.doc_id, count(*) AS n_trans,
-                  CAST(SUM(CASE WHEN big.c2 IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hit
-                FROM tr LEFT JOIN big USING (w1, w2)
-                WHERE tr.source <> 'src0'
-                  AND tr.doc_id IN (SELECT doc_id FROM p1)
-                GROUP BY 1),
-         fk AS (SELECT doc_id FROM sc
-                WHERE n_trans > 0 AND n_hit * 4 >= n_trans * 3
-                UNION ALL
-                SELECT doc_id FROM p1 WHERE source = 'src0'),
-         p2 AS (SELECT p1.* FROM p1 JOIN fk USING (doc_id)),
-         efp AS (SELECT doc_id, md5(array_to_string($sqlToks, ' ')) AS fp FROM p2),
-         ek AS (SELECT min(doc_id) AS doc_id FROM efp GROUP BY fp),
-         p3 AS (SELECT p2.* FROM p2 JOIN ek USING (doc_id)),
-         sh AS (SELECT doc_id, unnest($sqlShingles) AS s FROM p3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-         pairs AS (SELECT doc_a, doc_b FROM pr
-                   JOIN sizes sa ON doc_a = sa.doc_id
-                   JOIN sizes sb ON doc_b = sb.doc_id
-                   WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-         edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                   UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach(src, dst) AS (
-           SELECT src, dst FROM edges
-           UNION
-           SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         comp AS (SELECT src AS doc_id, least(src, min(dst)) AS component
-                  FROM reach GROUP BY src),
-         lab AS (SELECT p3.doc_id, p3.n_chars,
-                        COALESCE(c.component, p3.doc_id) AS component
-                 FROM p3 LEFT JOIN comp c USING (doc_id)),
-         nk AS (SELECT doc_id FROM (
-                  SELECT doc_id, row_number() OVER (PARTITION BY component
-                    ORDER BY n_chars DESC, doc_id) AS rn FROM lab)
-                WHERE rn = 1),
-         p4 AS (SELECT p3.* FROM p3 JOIN nk USING (doc_id)),
-         ev AS (SELECT DISTINCT s FROM (
-                  SELECT unnest(${sqlShinglesN("tks", 5)}) AS s FROM (
-                    SELECT $sqlToks AS tks FROM documents WHERE source = 'src0'))),
-         cont AS (SELECT DISTINCT doc_id FROM (
-                    SELECT doc_id, unnest(${sqlShinglesN("tks", 5)}) AS s FROM (
-                      SELECT doc_id, $sqlToks AS tks FROM p4 WHERE source <> 'src0'))
-                  WHERE s IN (SELECT s FROM ev))
-         SELECT d.doc_id,
-                CASE WHEN q.doc_id IS NULL THEN 'dropped_quality'
-                     WHEN fk.doc_id IS NULL THEN 'dropped_fluency'
-                     WHEN ek.doc_id IS NULL THEN 'dropped_exact'
-                     WHEN nk.doc_id IS NULL THEN 'dropped_near'
-                     WHEN d.source = 'src0' THEN 'dropped_eval'
-                     WHEN cont.doc_id IS NOT NULL THEN 'dropped_contaminated'
-                     ELSE 'kept' END AS verdict
-         FROM documents d
-         LEFT JOIN q ON d.doc_id = q.doc_id
-         LEFT JOIN fk ON d.doc_id = fk.doc_id
-         LEFT JOIN ek ON d.doc_id = ek.doc_id
-         LEFT JOIN nk ON d.doc_id = nk.doc_id
-         LEFT JOIN cont ON d.doc_id = cont.doc_id"""
-    },
+    "d13_dedup_verdict" -> verdictOracle(lmGate = false),
+    "d26_verdict_lm" -> verdictOracle(lmGate = true),
 
     "d03_jaccard_pairs" -> jaccardOracle(0.8),
     // the k-curve: g01's signature replay keyed by doc over shingle
@@ -5404,16 +5231,7 @@ object NorthStar {
               / greatest(len($sqlToks), 1) AS ttr
           FROM documents""",
     "t06_quality_filter" ->
-      s"""SELECT doc_id,
-            (CAST(len($sqlToks) AS INT) >= 5
-             AND CAST(length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS DOUBLE)
-                 / greatest(length(text), 1) <= 0.2
-             AND CAST(len(list_filter($sqlToks,
-                  x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                 / greatest(len($sqlToks), 1) >= 0.01
-             AND CAST(len(list_distinct($sqlToks)) AS DOUBLE)
-                 / greatest(len($sqlToks), 1) >= 0.3) AS keep
-          FROM documents""",
+      s"""SELECT doc_id, ($t06Sql) AS keep FROM documents""",
     "t23_ngram_novelty" ->
       s"""WITH g AS (SELECT doc_id, unnest($sqlShingles) AS gram FROM documents),
             df AS (SELECT gram, count(*) AS df FROM g GROUP BY 1),

@@ -1021,8 +1021,11 @@ object ScaleDryRun {
     val bounds = li.agg(max(col("l_suppkey")), max(col("l_partkey"))).first()
     require(!bounds.isNullAt(0), s"cannot replicate: $srcDir lineitem is empty")
     val (offS, offP) = (bounds.getLong(0) + 1L, bounds.getLong(1) + 1L)
-    // supplierPartEdges maps parts to partkey + 10^7; replicated part
-    // ids must stay below that offset so the two id spaces stay disjoint
+    // supplierPartEdges maps parts to partkey + 10^7; replicated supplier
+    // and part ids must both stay below that offset so the two id spaces
+    // stay disjoint
+    require(offS * factor < 10000000L,
+      s"supplier id space overflow: ${offS * factor} >= 1e7")
     require(offP * factor < 10000000L,
       s"part id space overflow: ${offP * factor} >= 1e7")
     materialize(spark, s"$synthDir/lineitem.parquet") {

@@ -629,10 +629,11 @@ case class PassJoinProbeWindows(child: Expression, maxDist: Int)
 
   // nearly every corpus row shares lb == prefixLen, so the enumeration
   // + sort + dedup below would re-run identically per row — memoize the
-  // last (lb, result). One immutable pair field: reference reads/writes
-  // are atomic, so a racily shared instance at worst recomputes; the
-  // cached ArrayData is only ever read by consumers (r18, advisor note).
-  @transient private var lastWindows: (Int, ArrayData) = null
+  // last (lb, result). One volatile field holding an immutable pair, so
+  // a racily shared instance at worst recomputes. The cached value must
+  // stay immutable (never a reused/mutable structure such as a recycled
+  // UnsafeArrayData): consumers only ever read it.
+  @transient @volatile private var lastWindows: (Int, ArrayData) = null
 
   def compute(lb: Int): ArrayData = {
     val cached = lastWindows

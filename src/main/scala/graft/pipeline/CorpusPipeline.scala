@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.{TextFunctions => TF}
-import graft.operators.Dedup
+import graft.functions.{Hashing, TextFunctions => TF}
+import graft.operators.{Dedup, LmFluency}
 
 /**
  * End-to-end LLM training-corpus preparation — the COMPOSITION of the
@@ -20,16 +20,16 @@ import graft.operators.Dedup
  *   0b. encoding-damage gate   (optional, t44's mojibake keep flag —
  *                               decode damage the quality ratios cannot
  *                               see, dropped before fingerprinting)
- *   1. quality filter          (t06's keep rules)
- *   1b. LM-fluency gate        (optional, t39's bigram-LM keep rule —
- *                               the CCNet ordering: heuristic quality,
- *                               then LM perplexity filter, then dedup)
- *   2. exact dedup             (d02: min-doc_id survivor per fingerprint)
- *   3. near-dup dedup          (d03 pairs → d06 clusters → d07 keep rule:
- *                               longest text per cluster)
- *   4. decontamination         (t12: drop docs sharing 5-gram shingles
- *                               with the held-out eval source)
+ *   1-4. the verdict chain     ([[verdictStages]]: quality, optional LM
+ *                               gate, exact dedup, near-dup dedup,
+ *                               eval exclusion + decontamination)
  *   5. split assignment        (t09: content-stable md5 train/val/test)
+ *
+ * The verdict chain is defined ONCE, in [[verdictStages]]; the
+ * d13_dedup_verdict and d26_verdict_lm harness queries are projections
+ * of the same chain (every document labeled with the stage that dropped
+ * it), so the oracle-checked verdicts and the released corpus cannot
+ * drift apart.
  *
  * Dataflow discipline (the 100 TB contract): document TEXT is read once
  * into the shingle/fingerprint projections; every stage communicates by
@@ -43,6 +43,89 @@ object CorpusPipeline {
   case class StageStats(stage: String, docs_in: Long, docs_out: Long)
 
   case class Result(corpus: DataFrame, stats: Seq[StageStats])
+
+  /**
+   * The staged dedup verdict over a documents frame (doc_id, text,
+   * source, n_chars; doc_id unique), in order:
+   *
+   *   quality_filter   [[TF.qualityKeep]] (t06's rule)
+   *   lm_fluency       optional, t39's bigram-LM keep rule — the CCNet
+   *                    ordering: heuristic quality, then LM perplexity
+   *                    filter, then dedup. The LM trains on the FULL
+   *                    evalSource slice of `docs` (the curated reference
+   *                    is given, not quality-gated); only non-evalSource
+   *                    survivors face the gate (≥ 3/4 of transitions
+   *                    LM-covered), evalSource rows bypass it (they leave
+   *                    at decontamination). One [[LmFluency.score]] body
+   *                    shared with the oracle-verified t39.
+   *   exact_dedup      d02: min doc_id per content fingerprint
+   *   neardup_dedup    `components` of the pool's near-dup pair graph →
+   *                    d07's keep rule: longest text per component
+   *   decontaminate    t12: evalSource docs leave, and so does every doc
+   *                    sharing a 5-gram shingle with the evalSource slice
+   *                    of `docs`
+   *
+   * Each stage maps the previous stage's survivor pool to its own, by
+   * doc_id keep-sets joined back as left_semi/left_anti, and passes it
+   * through `materialize` (called once per stage, in order); the
+   * returned frame is the pool the next stage reads. The caller chooses
+   * the materialization: [[run]] counts the pool for its stats, the
+   * harness verdicts checkpoint its doc_ids.
+   *
+   * The quality gate is a bare per-row filter. Under the unique-doc_id
+   * contract it keeps the same rows as a doc_id-keyed aggregate, and it
+   * adds no exchange or join to [[run]]'s lazily re-executed plan. Over
+   * NorthStar's docs() the predicate pushes below the pinned
+   * repartition onto the scan's single split; the harness verdicts
+   * checkpoint its result, so that runs once per query.
+   *
+   * @param components pool (doc_id, text, …) ⇒ (doc_id, component) for
+   *                   the pool's near-dup pairs; docs without a pair may
+   *                   be absent (they are their own component)
+   * @return each stage's name and survivor pool, in order
+   */
+  private[graft] def verdictStages(docs: DataFrame, evalSource: String,
+                                   lmGate: Boolean,
+                                   components: DataFrame => DataFrame,
+                                   materialize: (String, DataFrame) => DataFrame
+                                  ): Seq[(String, DataFrame)] = {
+    val pools = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
+    def stage(name: String)(survivors: DataFrame => DataFrame): Unit =
+      pools += name -> materialize(name, survivors(pools.lastOption.fold(docs)(_._2)))
+    def keepOnly(pool: DataFrame, keep: DataFrame) =
+      pool.join(keep, Seq("doc_id"), "left_semi")
+    val isEval = col("source") === evalSource
+    val shingles5 = explode(Hashing.shingleHashSet(TF.tokens(col("text")), 5))
+
+    stage("quality_filter")(_.filter(TF.qualityKeep(col("text"))))
+    if (lmGate) stage("lm_fluency")(pool => keepOnly(pool,
+      LmFluency.score(docs.filter(isEval).select(col("text")),
+          pool.filter(!isEval).select(col("doc_id"), col("text")))
+        .filter(col("keep")).select(col("doc_id"))
+        .unionByName(pool.filter(isEval).select(col("doc_id")))))
+    stage("exact_dedup")(pool => keepOnly(pool, pool
+      .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))))
+    stage("neardup_dedup") { pool =>
+      val w = Window.partitionBy(col("component"))
+      keepOnly(pool, pool.select(col("doc_id"), col("n_chars"))
+        .join(components(pool), Seq("doc_id"), "left")
+        .withColumn("component", coalesce(col("component"), col("doc_id")))
+        .withColumn("rn", row_number().over(
+          w.orderBy(col("n_chars").desc, col("doc_id"))))
+        .filter(col("rn") === 1).select(col("doc_id")))
+    }
+    stage("decontaminate") { pool =>
+      val evalSet = docs.filter(isEval).select(shingles5.as("s")).distinct()
+      val contaminated = pool.filter(!isEval)
+        .select(col("doc_id"), shingles5.as("s"))
+        .join(broadcast(evalSet), Seq("s"), "left_semi")
+        .select(col("doc_id")).distinct()
+      pool.filter(!isEval).join(contaminated, Seq("doc_id"), "left_anti")
+    }
+    pools.toSeq
+  }
 
   /**
    * Run the full preparation over a documents table
@@ -62,19 +145,8 @@ object CorpusPipeline {
    *                    the two stages is law-tested at scales where
    *                    both are feasible — verified pairs are EQUAL at
    *                    1x and 10x, SCALE.md).
-   * @param lmFluency   when true, insert the t39 bigram-LM fluency gate
-   *                    between the heuristic quality filter and dedup —
-   *                    the CCNet ordering. The LM trains on the FULL
-   *                    evalSource slice of the scrubbed corpus (the
-   *                    curated reference is given, not quality-gated);
-   *                    only non-evalSource quality survivors face the
-   *                    keep gate (≥ 3/4 of transitions LM-covered),
-   *                    evalSource rows bypass it (they are the
-   *                    reference, and leave at decontamination). One
-   *                    [[graft.operators.LmFluency.score]] body shared
-   *                    with the oracle-verified t39/d26 queries.
-   */
-  /**
+   * @param lmFluency   when true, the chain runs its LM-fluency gate
+   *                    (trained on the scrubbed evalSource slice).
    * @param mojibakeFilter when true, insert the encoding-damage gate
    *                    (TF.mojibakeColumns' keep flag — t44's contract)
    *                    between the PII scrub and the quality filter:
@@ -120,88 +192,27 @@ object CorpusPipeline {
       else stage("mojibake_filter",
         scrubbed0.filter(TF.mojibakeClean(col("text"))))
 
-    // 1. quality filter — per-row expressions only; THE shared keep rule
-    // (TF.qualityKeep — one definition with the streaming ingest gate).
-    // Input contract: doc_id is UNIQUE in `docs` (one row per document
-    // — the documents table's key; CorpusPipelineSpec asserts it). The
-    // per-row filter form relies on that: under duplicated doc_ids a
-    // doc_id-keyed semi-join would instead keep EVERY row of a doc_id
-    // when any row passes (ADVICE r16 — intentional per-row semantics,
-    // vacuously identical under the unique-key contract).
-    val quality = stage("quality_filter",
-      scrubbed.filter(TF.qualityKeep(col("text"))))
-
-    // 1b. optional LM-fluency gate — map-side broadcast scoring over the
-    // posexplode'd transitions plus one doc_id-keyed agg; no new
-    // corpus-sized shuffle joins the pipeline (LmFluency's scale note)
-    val fluent =
-      if (!lmFluency) quality
-      else {
-        val keep = graft.operators.LmFluency.score(
-            scrubbed.filter(col("source") === evalSource).select(col("text")),
-            quality.filter(col("source") =!= evalSource)
-              .select(col("doc_id"), col("text")))
-          .filter(col("keep")).select(col("doc_id"))
-          .unionByName(quality.filter(col("source") === evalSource)
-            .select(col("doc_id")))
-        stage("lm_fluency", quality.join(keep, Seq("doc_id"), "left_semi"))
-      }
-
-    // 2. exact dedup — keep the min doc_id per content fingerprint
-    val exact = {
-      val keep = fluent
-        .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      stage("exact_dedup", fluent.join(keep, Seq("doc_id"), "left_semi"))
-    }
-
-    // 3. near-dup dedup — pairs → components → longest-text survivor
-    val nearDup = {
-      val hs = Dedup.shingleHashTable(exact, "doc_id", "text", 3).persist()
+    // 1-4. the verdict chain over the scrubbed text; the near-dup stage
+    // builds its pairs fresh over its pool (exact or LSH). Both pair
+    // stages return a persisted frame and the components are eager
+    // (collected or checkpointed), so neither cache is read again.
+    def nearDupComponents(pool: DataFrame): DataFrame = {
+      val hs = Dedup.shingleHashTable(pool, "doc_id", "text", 3).persist()
       val pairs =
         if (lshPairs) Dedup.minhashLshPairs(hs, jaccard, k = 128, bands = 32,
           estFloor = jaccard - 0.2)
         else Dedup.jaccardPairsExact(hs, jaccard)
       val comps = Dedup.connectedComponents(
         pairs.select(col("doc_a"), col("doc_b")))
-      // both pair stages return a persisted frame; the components are
-      // eager (collected or checkpointed), so nothing downstream reads it
       pairs.unpersist()
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-      val keep = exact.select(col("doc_id"), col("n_chars"))
-        .join(comps, Seq("doc_id"), "left")
-        .withColumn("component", coalesce(col("component"), col("doc_id")))
-        .withColumn("rn", row_number().over(
-          w.orderBy(col("n_chars").desc, col("doc_id"))))
-        .filter(col("rn") === 1)
-        .select(col("doc_id"))
-      val out = stage("neardup_dedup",
-        exact.join(keep, Seq("doc_id"), "left_semi"))
       hs.unpersist()
-      out
+      comps
     }
-
-    // 4. decontamination — drop docs overlapping the eval source's 5-grams
-    val clean = {
-      val sh = nearDup.select(col("doc_id"), col("source"),
-        explode(graft.functions.Hashing.shingleHashSet(TF.tokens(col("text")), 5)).as("s"))
-      // eval shingles come from the SCRUBBED text too — both sides of the
-      // contamination compare must live in the same text space
-      val evalSet = scrubbed.filter(col("source") === evalSource)
-        .select(explode(graft.functions.Hashing.shingleHashSet(
-          TF.tokens(col("text")), 5)).as("s")).distinct()
-      val contaminated = sh.filter(col("source") =!= evalSource)
-        .join(broadcast(evalSet), Seq("s"), "left_semi")
-        .select(col("doc_id")).distinct()
-      // eval-source docs themselves also leave the training corpus
-      stage("decontaminate",
-        nearDup.filter(col("source") =!= evalSource)
-          .join(contaminated, Seq("doc_id"), "left_anti"))
-    }
+    val clean = verdictStages(scrubbed, evalSource, lmFluency,
+      nearDupComponents, stage).last._2
 
     // 5. content-stable split assignment: the bucket hash is the CONTENT
-    // fingerprint (same md5 as stage 2), NOT doc_id — re-ingesting the
+    // fingerprint (same md5 as exact dedup), NOT doc_id — re-ingesting the
     // same document under a new id must land in the same split, or the
     // re-ingest leaks val/test text into train (the exact leakage this
     // pattern exists to prevent). Id-keyed bucketing (t09's form) is

@@ -15,8 +15,11 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
 
   test("repeated pair-engine and graph invocations: storage is flat after release") {
     import spark.implicits._
+    // d13/d26 checkpoint their keep-lists and read this corpus's memos
+    val dir = "/root/testdata/sf0.001"
     // start from a known-clean tracked set (other suites share the session)
-    Checkpoints.release(spark)
+    NorthStar.releaseCaches(spark, dir)
+    val baseSet = spark.sparkContext.getPersistentRDDs.keySet
     val base = persisted
     val hashes = Seq((1L, 0x00L), (2L, 0x01L), (3L, 0x01L), (4L, 0xf0f0L))
       .toDF("id", "h")
@@ -36,6 +39,9 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
         edges.select(col("u").as("src"), col("v").as("dst"))
           .unionByName(edges.select(col("v").as("src"), col("u").as("dst"))),
         Seq(1L).toDF("node"), iters = 5).count() == 5)
+      // the staged verdicts: one tracked checkpoint per keep-list
+      for (q <- Seq("d13_dedup_verdict", "d26_verdict_lm"))
+        assert(NorthStar.queries(q)(spark, dir).count() > 0)
       // in-loop frees (superseded rounds) already ran; what's left is the
       // per-call tracked set the RESULTS read — it must not grow with i
       val now = persisted - base
@@ -43,8 +49,8 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
       if (perCall < 0) perCall = now
       else assert(now == perCall,
         s"iteration $i grew tracked storage: $now persisted vs $perCall after first call")
-      Checkpoints.release(spark)
-      assert(persisted == base,
+      NorthStar.releaseCaches(spark, dir)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == baseSet,
         s"release left ${persisted - base} persisted RDDs behind")
     }
   }

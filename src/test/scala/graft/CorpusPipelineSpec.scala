@@ -39,6 +39,44 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(st.last.docs_out > 0, "pipeline must not empty the corpus")
   }
 
+  test("law: run is a projection of the shared verdict chain — released " +
+       "doc_ids are the chain's survivors and each stage's docs_out is the " +
+       "chain's pool size, in both pair modes, LM gate on and off") {
+    // plant exact duplicates (re-crawls under new, larger ids on a
+    // residue class): the harness corpus has none, and the exact stage's
+    // survivor choice must show in the released ids
+    val input = docs.unionByName(docs.filter(col("doc_id") % 5 === 1)
+      .withColumn("doc_id", col("doc_id") + 1000000L))
+    val scrubbed = input.withColumn("text", TF.scrubPii(col("text")))
+    // reference components: exact Jaccard pairs built here over the pool
+    def exactComponents(pool: org.apache.spark.sql.DataFrame) = {
+      val pairs = graft.operators.Dedup.jaccardPairsExact(
+        pool.select(col("doc_id"), col("text")), "doc_id", "text", 0.8)
+      val comps = graft.operators.Dedup.connectedComponents(
+        pairs.select(col("doc_a"), col("doc_b")))
+      pairs.unpersist()
+      comps
+    }
+    for (lm <- Seq(false, true)) {
+      val chain = CorpusPipeline.verdictStages(scrubbed, "src0", lm,
+        exactComponents, (_, pool) => pool)
+      val poolSizes = chain.map { case (name, pool) => name -> pool.count() }
+      val survivors = chain.last._2.select(col("doc_id")).as[Long].collect().toSet
+      assert(survivors.nonEmpty, "fixture premise: the chain releases documents")
+      val exact = chain.indexWhere(_._1 == "exact_dedup")
+      assert(poolSizes(exact)._2 < poolSizes(exact - 1)._2,
+        "fixture premise: the exact stage drops the planted duplicates")
+      for (lsh <- Seq(false, true)) {
+        val run = CorpusPipeline.run(input, lshPairs = lsh, lmFluency = lm)
+        val released = run.corpus.select(col("doc_id")).as[Long].collect().toSet
+        assert(released == survivors, s"lm=$lm lsh=$lsh: released ids drifted " +
+          s"from the chain: ${(released diff survivors) ++ (survivors diff released)}")
+        assert(run.stats.tail.map(st => st.stage -> st.docs_out) == poolSizes,
+          s"lm=$lm lsh=$lsh: stage stats ${run.stats} vs chain pools $poolSizes")
+      }
+    }
+  }
+
   test("final corpus: no exact duplicates, no eval-source docs, full split cover") {
     val c = result.corpus.cache()
     val n = c.count()
