@@ -1032,11 +1032,13 @@ object NorthStar {
 
   /** d13/d26: [[graft.pipeline.CorpusPipeline.verdictStages]] over the
     * raw documents, every document labeled with the first stage whose
-    * keep-list lacks it. Each stage's doc_ids are a tracked checkpoint
+    * keep-list lacks it. Each stage's keep-list is a tracked checkpoint
     * (ids only, never text), and the next stage's pool is the documents
     * semi-joined with it: each list is read by that pool AND by its
     * label join, and without a barrier each read re-runs its whole
     * lineage (d16 re-runs this body once more for its release join).
+    * The list is checkpointed as the stage picked it, not re-derived
+    * from its pool, which would add a join of the pool with it.
     * Near-dup components come from the MEMOIZED corpus pair set
     * restricted to the pool — Jaccard is pool-independent, so that is
     * the pool's pair set, with no fresh PPJoin run. */
@@ -1051,8 +1053,8 @@ object NorthStar {
     }
     val keeps = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
     graft.pipeline.CorpusPipeline.verdictStages(d, "src0", lmGate, poolComponents,
-      (name, pool) => {
-        val keep = graft.Checkpoints.tracked(pool.select(col("doc_id")))
+      (name, _, ids) => {
+        val keep = graft.Checkpoints.tracked(ids)
         keeps += name -> keep
         d.join(keep, Seq("doc_id"), "left_semi")
       })
@@ -3701,7 +3703,9 @@ object NorthStar {
         .filter(col("df") === 1)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_uniq"))
       val nd = col("n_grams") - coalesce(col("n_uniq"), lit(0L))
-      docs(s, dir)
+      // a NULL text has no grams and emits no row, as in the explode
+      // shape (and the oracle's unnest); any other text has ≥ 1 gram
+      docs(s, dir).filter(col("text").isNotNull)
         .select(col("doc_id"),
           size(TF.shingles(col("text"))).cast(LongType).as("n_grams"))
         .join(uniqPerDoc, Seq("doc_id"), "left")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
  * THE one place the engine-session configuration lives (r18, verdict
  * item: the timed configuration and the engine configuration must be
  * the same thing). Every main that builds a session — Bench, Verify,
- * Explain, StageProfile, TimeQuery, ScaleDryRun — and the test suites'
+ * Explain, ScaleDryRun — and the test suites'
  * shared session route their builder through [[apply]];
  * master/parallelism stay with the caller (the bench contract reads
  * `$SPARK_GRAFT_CPUS`, Explain pins local[4]).

@@ -67,10 +67,12 @@ object CorpusPipeline {
    *
    * Each stage maps the previous stage's survivor pool to its own, by
    * doc_id keep-sets joined back as left_semi/left_anti, and passes it
-   * through `materialize` (called once per stage, in order); the
-   * returned frame is the pool the next stage reads. The caller chooses
-   * the materialization: [[run]] counts the pool for its stats, the
-   * harness verdicts checkpoint its doc_ids.
+   * with its keep-list (the survivors' doc_ids, a subset of the pool
+   * the stage read) through `materialize` (called once per stage, in
+   * order); the returned frame is the pool the next stage reads. The
+   * caller chooses the materialization: [[run]] counts the pool for its
+   * stats, the harness verdicts checkpoint the keep-list, which skips
+   * the pool's join back.
    *
    * The quality gate is a bare per-row filter. Under the unique-doc_id
    * contract it keeps the same rows as a doc_id-keyed aggregate, and it
@@ -82,41 +84,51 @@ object CorpusPipeline {
    * @param components pool (doc_id, text, …) ⇒ (doc_id, component) for
    *                   the pool's near-dup pairs; docs without a pair may
    *                   be absent (they are their own component)
+   * @param materialize (stage name, survivor pool, keep-list) ⇒ the pool
+   *                   the next stage reads
    * @return each stage's name and survivor pool, in order
    */
   private[graft] def verdictStages(docs: DataFrame, evalSource: String,
                                    lmGate: Boolean,
                                    components: DataFrame => DataFrame,
-                                   materialize: (String, DataFrame) => DataFrame
+                                   materialize: (String, DataFrame, DataFrame) => DataFrame
                                   ): Seq[(String, DataFrame)] = {
     val pools = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
-    def stage(name: String)(survivors: DataFrame => DataFrame): Unit =
-      pools += name -> materialize(name, survivors(pools.lastOption.fold(docs)(_._2)))
-    def keepOnly(pool: DataFrame, keep: DataFrame) =
-      pool.join(keep, Seq("doc_id"), "left_semi")
+    def current = pools.lastOption.fold(docs)(_._2)
+    // a stage whose survivors are a filter of its pool
+    def filterStage(name: String)(survivors: DataFrame => DataFrame): Unit = {
+      val out = survivors(current)
+      pools += name -> materialize(name, out, out.select(col("doc_id")))
+    }
+    // a stage that picks a doc_id keep-list from its pool
+    def keepStage(name: String)(keep: DataFrame => DataFrame): Unit = {
+      val in = current
+      val ids = keep(in)
+      pools += name -> materialize(name, in.join(ids, Seq("doc_id"), "left_semi"), ids)
+    }
     val isEval = col("source") === evalSource
     val shingles5 = explode(Hashing.shingleHashSet(TF.tokens(col("text")), 5))
 
-    stage("quality_filter")(_.filter(TF.qualityKeep(col("text"))))
-    if (lmGate) stage("lm_fluency")(pool => keepOnly(pool,
+    filterStage("quality_filter")(_.filter(TF.qualityKeep(col("text"))))
+    if (lmGate) keepStage("lm_fluency")(pool =>
       LmFluency.score(docs.filter(isEval).select(col("text")),
           pool.filter(!isEval).select(col("doc_id"), col("text")))
         .filter(col("keep")).select(col("doc_id"))
-        .unionByName(pool.filter(isEval).select(col("doc_id")))))
-    stage("exact_dedup")(pool => keepOnly(pool, pool
+        .unionByName(pool.filter(isEval).select(col("doc_id"))))
+    keepStage("exact_dedup")(_
       .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))))
-    stage("neardup_dedup") { pool =>
+      .select(col("doc_id")))
+    keepStage("neardup_dedup") { pool =>
       val w = Window.partitionBy(col("component"))
-      keepOnly(pool, pool.select(col("doc_id"), col("n_chars"))
+      pool.select(col("doc_id"), col("n_chars"))
         .join(components(pool), Seq("doc_id"), "left")
         .withColumn("component", coalesce(col("component"), col("doc_id")))
         .withColumn("rn", row_number().over(
           w.orderBy(col("n_chars").desc, col("doc_id"))))
-        .filter(col("rn") === 1).select(col("doc_id")))
+        .filter(col("rn") === 1).select(col("doc_id"))
     }
-    stage("decontaminate") { pool =>
+    filterStage("decontaminate") { pool =>
       val evalSet = docs.filter(isEval).select(shingles5.as("s")).distinct()
       val contaminated = pool.filter(!isEval)
         .select(col("doc_id"), shingles5.as("s"))
@@ -126,6 +138,15 @@ object CorpusPipeline {
     }
     pools.toSeq
   }
+
+  /** [[verdictStages]] for a caller that materializes the pool only. */
+  private[graft] def verdictStages(docs: DataFrame, evalSource: String,
+                                   lmGate: Boolean,
+                                   components: DataFrame => DataFrame,
+                                   materialize: (String, DataFrame) => DataFrame
+                                  ): Seq[(String, DataFrame)] =
+    verdictStages(docs, evalSource, lmGate, components,
+      (name: String, pool: DataFrame, _: DataFrame) => materialize(name, pool))
 
   /**
    * Run the full preparation over a documents table
@@ -209,7 +230,7 @@ object CorpusPipeline {
       comps
     }
     val clean = verdictStages(scrubbed, evalSource, lmFluency,
-      nearDupComponents, stage).last._2
+      nearDupComponents, stage _).last._2
 
     // 5. content-stable split assignment: the bucket hash is the CONTENT
     // fingerprint (same md5 as exact dedup), NOT doc_id — re-ingesting the

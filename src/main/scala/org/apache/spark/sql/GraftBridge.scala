@@ -40,6 +40,11 @@ object GraftBridge {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
+  /** Block until every queued listener event has been delivered, so a
+    * listener read after an action has seen all of that action's stages
+    * (the listener bus is `private[spark]`). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Register a function on a live session's registry (the session-scoped
     * analogue of SparkSessionExtensions.injectFunction). */
   def registerFunction(

@@ -547,6 +547,20 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(got.exists(_._3 > 0), "corpus should contain some duplicated grams")
   }
 
+  test("t23: a document whose text is NULL emits no row; the other rows are unchanged") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_t23").toString
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    docs.unionByName(docs.limit(1)
+        .withColumn("doc_id", lit(-1L)).withColumn("text", lit(null).cast("string")))
+      .write.parquet(s"$tmp/documents.parquet")
+    def rows(d: String) =
+      SparkEntry.queries("t23_ngram_novelty")(spark, d).as[(Long, Long, Long, Double)].collect()
+    val got = rows(tmp)
+    assert(!got.exists(_._1 == -1L), "the NULL-text document emitted a row")
+    assert(got.toSet == rows(dir).toSet)
+    NorthStar.releaseCaches(spark, tmp)
+  }
+
   test("a04 HLL registers and raw estimate replay exactly; error is sketch-bounded") {
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .select(col("event_type"), col("user_id")).as[(String, Long)].collect()

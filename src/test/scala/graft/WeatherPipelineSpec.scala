@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.TestListeners
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,11 +48,11 @@ class WeatherPipelineSpec extends AnyFunSuite {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
-    TestListeners.drain(sc)
+    GraftBridge.drainListeners(sc)
     sc.addSparkListener(listener)
     try {
       p.exportCsv(p.joined())
-      TestListeners.drain(sc)
+      GraftBridge.drainListeners(sc)
     } finally sc.removeSparkListener(listener)
     assert(jobs.get == 2, s"expected broadcast + write jobs, saw ${jobs.get}")
   }
