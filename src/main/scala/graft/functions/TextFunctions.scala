@@ -756,11 +756,6 @@ object TextFunctions {
     column(MinHashSignature(expression(h0), k))
   }
 
-  /** MinHash signature straight from shingle strings (convenience form —
-    * prefer shingleHashes + minhashFromHashes with a cached h0 column). */
-  def minhashSignature(shingleCol: Column, k: Int = 64): Column =
-    minhashFromHashes(shingleHashes(shingleCol), k)
-
   /**
    * LSH band hashes: split the k-length signature into `bands` bands of
    * k/bands rows, hash each band. Candidate pairs = documents sharing any

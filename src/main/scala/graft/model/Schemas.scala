@@ -108,6 +108,36 @@ object Schemas {
     "max_temperature_fahrenheit", "pressure", "humidity", "wind_speed",
     "time_of_record", "sunrise", "sunset", "census_2020",
     "land_area_sq_mile_2020")
+
+  /** Scrubbed or pseudonymized corpus: (doc_id, text, fp = md5 of text). */
+  val scrubbedStore: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("fp", StringType)))
+
+  /** Corpus change events: digest NULL on a removal. */
+  val snapshotEventStore: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("digest", StringType),
+    StructField("status", StringType)))
+
+  /** Vector index: the stored embedding and its packed bit signature. */
+  val vectorStore: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("sig", ArrayType(LongType))))
+
+  /** The vector index's cell sidecar (unpartitioned): one row per
+    * (vector, probed coarse cell). */
+  val vectorCells: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("cell", IntegerType)))
+
+  /** A streaming store's read schema (graft.streaming.StreamingIngest):
+    * the layouts above are the files' columns, and `_batch_id`, the
+    * partition column, lives in the directory names. */
+  def batchPartitioned(layout: StructType): StructType =
+    layout.add("_batch_id", LongType)
 }
 
 /** Typed views for the two stable records (SURVEY.md §1.3). */

@@ -49,13 +49,6 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"),
       Hashing.shingleHashSet(TF.tokens(col(textCol)), n).as("hs"))
 
-  /** String-shingle variant of [[shingleHashTable]] — kept for callers
-    * that need the shingle text itself (debugging, explainability). The
-    * pair detectors do not use it. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"), TF.tokens(col(textCol)).as("tk"))
-      .select(col("doc_id"), TF.shinglesFromTokens(col("tk"), n).as("sh"))
-
   /**
    * Exact Jaccard pairs ≥ threshold, AllPairs/PPJoin family. Three exact
    * (recall-lossless) filters shrink the candidate set before any pair is

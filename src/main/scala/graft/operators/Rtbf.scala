@@ -87,25 +87,10 @@ object Rtbf {
     corpus.withColumn(pseudoCol, TF.forgetTags(col(pseudoCol), tags, replacement))
   }
 
-  /**
-   * The release form WITH DERIVED-COLUMN CASCADE (r16 verdict #1): a
-   * release row rarely carries only the text — it also carries columns
-   * DERIVED from the text (the ingest store's `fp` = fingerprint(text),
-   * quality scores, token counts). Rewriting the text and shipping the
-   * old derivatives is an RTBF hole twice over: the stale value is
-   * inconsistent (an exact-dedup pass would keep treating the forgotten
-   * content as present), and a content-derived fingerprint of FORGOTTEN
-   * text is itself a trace of it. `derived` maps each derived column to
-   * its recompute expression over the REWRITTEN row (applied in order,
-   * so later entries may read earlier ones); still map-only.
-   */
-  def applyLedgerCascade(corpus: DataFrame, pseudoCol: String,
-                         ledger: DataFrame, key: String, mac: Boolean,
-                         derived: Seq[(String, Column)],
-                         replacement: String = "<FORGOTTEN>"): DataFrame =
-    withDerived(applyLedger(corpus, pseudoCol, ledger, key, mac, replacement),
-      derived)
-
+  /** Recompute each derived column (e.g. the store's `fp`, the text's
+    * fingerprint) over the REWRITTEN row, in order: shipping the old
+    * derivative of forgotten text would both contradict the text and
+    * trace it. */
   private def withDerived(df: DataFrame,
                           derived: Seq[(String, Column)]): DataFrame =
     derived.foldLeft(df) { case (d, (name, expr)) => d.withColumn(name, expr) }

@@ -94,13 +94,16 @@ object Sinks {
   }
 
   /**
-   * Idempotent daily append (the §7.3#5 fix for the reference's
-   * double-insert-on-retry flaw): each run overwrites only its own
-   * partition, so a retry replaces rather than duplicates.
+   * Idempotent partitioned append (the §7.3#5 fix for the reference's
+   * double-insert-on-retry flaw): the write overwrites only the
+   * `partitionCol` partitions that `df` holds rows for, so a retried run
+   * or a replayed stream micro-batch replaces its partition rather than
+   * duplicating it, and every other partition is untouched. An empty `df`
+   * replaces nothing.
    */
-  def idempotentDailyAppend(df: DataFrame, runDateCol: String, path: String): Unit =
+  def overwritePartitions(df: DataFrame, partitionCol: String, path: String): Unit =
     df.write.mode(SaveMode.Overwrite)
-      .partitionBy(runDateCol)
+      .partitionBy(partitionCol)
       .option("partitionOverwriteMode", "dynamic")
       .parquet(path)
 

@@ -39,11 +39,6 @@ object Sources {
     raw.toDF("raw").select(from_json(col("raw"), schema).as("payload"))
   }
 
-  /** JSON documents from files on disk (landing-directory form of op 2). */
-  def jsonDocumentsFromPath(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(StructType(Seq(org.apache.spark.sql.types.StructField("raw", org.apache.spark.sql.types.StringType))))
-      .text(path).select(from_json(col("value"), schema).as("payload"))
-
   /**
    * Op 1 — availability sensor. The reference gates the DAG on an
    * HttpSensor poll (weather_etl_pipeline.py:282-286). Engine equivalent:

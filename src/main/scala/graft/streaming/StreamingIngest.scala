@@ -1,12 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.model.Schemas
-import graft.operators.WeatherOps
+import graft.operators.{AnnJoin, LmFluency, Rtbf, WeatherOps}
+import graft.sinks.Sinks
 
 /**
  * Structured Streaming formulation of the ingest (SURVEY.md §7.1 M4).
@@ -16,38 +19,92 @@ import graft.operators.WeatherOps
  * (reference codes/weather_etl_pipeline.py:274 `@daily`); this module is
  * the same dataflow as an always-on stream: a landing directory of JSON
  * payloads → the identical flatten/convert transform → an idempotent
- * append sink. Replays cannot double-insert (the reference's
- * retry-duplicates flaw, SURVEY.md §2.1/§7.3#5): each micro-batch
- * overwrites only its own `_batch_id` partition, so re-execution of a
- * batch after failure replaces rather than duplicates.
+ * append sink. Every `start*` drains through [[drain]]:
+ * `Trigger.AvailableNow` gives the reference's cadence (run, drain,
+ * stop) on streaming semantics, exactly-once per input across restarts
+ * via the checkpoint.
  *
- * Scale posture: the file source lists incrementally, the transform is
- * the same codegen'd projection as batch, and the sink writes
+ * The batch-partition contract, shared by every store written here
+ * except the top-k table: the store is parquet partitioned by
+ * `_batch_id`, and each micro-batch OWNS its partition.
+ *  - [[replaceBatchPartition]] overwrites exactly that partition
+ *    (dynamic partition overwrite), so a replay — the engine re-runs the
+ *    latest batch when its write landed but its checkpoint commit did
+ *    not — replaces the batch instead of duplicating it. This is the fix
+ *    for the reference's retry double-insert (SURVEY.md §2.1/§7.3#5).
+ *  - A batch that writes no rows drops its partition, so an empty
+ *    replay leaves no stale partition behind; a store left with no
+ *    partition is removed. An empty partitioned root is a schemaless
+ *    directory that fails every inferring read (UNABLE_TO_INFER_SCHEMA),
+ *    while an absent store is the well-defined "nothing admitted yet"
+ *    state that [[readStore]] reports as None.
+ *  - A batch function that reads its own store reads it WITHOUT its own
+ *    partition, so a replay computes against the same state as the
+ *    first attempt. Replays are always of the latest batch: checkpoint
+ *    commits are sequential.
+ *
+ * Scale posture: the file source lists incrementally, the transforms
+ * are the same codegen'd projections as batch, and the sinks write
  * partition-per-batch — no global state, no driver materialization.
  */
 object StreamingIngest {
 
-  /** Remove a batch's `_batch_id=` partition (and, if it was the last
-    * one, the whole store) — the empty-replay arm of the idempotence
-    * contract: dynamic overwrite cannot write an empty partition, so a
-    * replay whose recomputation admits NOTHING must delete whatever its
-    * previous attempt wrote (store or landing data drifted between
-    * attempts), or the stale partition silently survives the "replay
-    * replaces itself" promise. Removing the last partition removes the
-    * root too: an empty partitioned root is a schemaless dir that wedges
-    * later reads, while an ABSENT store is the well-defined "nothing
-    * admitted yet" state every probe here already handles. */
-  private[graft] def dropBatchPartition(spark: SparkSession, storePath: String,
-                                        batchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = new org.apache.hadoop.fs.Path(root, s"_batch_id=$batchId")
-    if (fs.exists(part)) {
-      fs.delete(part, true)
-      val anyLeft = fs.exists(root) && fs.listStatus(root)
-        .exists(_.getPath.getName.startsWith("_batch_id="))
-      if (!anyLeft) fs.delete(root, true)
+  /** Drain `df` to the end of its available input through `batchFn`,
+    * once per micro-batch. */
+  private def drain(df: DataFrame, checkpointDir: String)(
+      batchFn: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(batchFn)
+      .start()
+
+  /** The store at `path` read under its declared `layout` (no footer
+    * inference job), or None while nothing has been written there.
+    * Probing existence explicitly, not catching a failed read, keeps
+    * real read failures (a corrupt footer, a transient FS error) failing
+    * the batch so that the checkpoint retries it. */
+  private def readStore(spark: SparkSession, path: String,
+                        layout: StructType): Option[DataFrame] = {
+    val p = new Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(spark.read.schema(layout).parquet(path))
+    else None
+  }
+
+  /**
+   * Replace batch `batchId`'s partition of the store at `storePath` with
+   * `rows`, and return the number of rows written. The count comes from
+   * an `Observation` on the write itself, so it costs no job. When no
+   * row was written, the batch's partition is dropped, and so is a root
+   * left without partitions (the object scaladoc's contract).
+   *
+   * The Observation adds no error line to a failed write. Spark's
+   * session-wide observation listener reads `observedMetrics` of every
+   * failed query; that rethrows, as one more ERROR
+   * (`ExecutionListenerBus: Listener … threw an exception`), only when
+   * the query failed before it had a physical plan. A batch write that
+   * fails while it runs has its plan, so the batch fails with its own
+   * exception and its own log lines (StreamingSpec), and nothing waits
+   * on the failed write's Observation.
+   */
+  private[graft] def replaceBatchPartition(rows: DataFrame, storePath: String,
+                                           batchId: Long): Long = {
+    val written = Observation()
+    Sinks.overwritePartitions(
+      rows.observe(written, count(lit(1)).as("rows"))
+        .withColumn("_batch_id", lit(batchId)),
+      "_batch_id", storePath)
+    val n = written.get("rows").asInstanceOf[Long]
+    if (n == 0) {
+      val root = new Path(storePath)
+      val fs = root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(root, s"_batch_id=$batchId"), true)
+      if (fs.exists(root) &&
+          !fs.listStatus(root).exists(_.getPath.getName.startsWith("_batch_id=")))
+        fs.delete(root, true)
     }
+    n
   }
 
   /** Streaming op 2-7: landing dir of JSON-line payloads → weather rows. */
@@ -59,26 +116,11 @@ object StreamingIngest {
       raw.select(from_json(col("value"), Schemas.owmPayload).as("payload")))
   }
 
-  /**
-   * Idempotent streaming append (ops 8/10 as a stream sink): dynamic
-   * partition overwrite keyed by micro-batch id. `Trigger.AvailableNow`
-   * gives the reference's batch cadence (run, drain, stop) on streaming
-   * semantics — exactly-once per payload across restarts via the
-   * checkpoint.
-   */
+  /** Idempotent streaming append (ops 8/10 as a stream sink): each
+    * micro-batch lands as its own `_batch_id` partition. */
   def startIdempotentAppend(df: DataFrame, storePath: String,
                             checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id")
-          .parquet(storePath)
-      }
-      .start()
+    drain(df, checkpointDir)(replaceBatchPartition(_, storePath, _))
 
   /**
    * Streaming corpus CDC — the streaming twin of batch q60's snapshot
@@ -88,78 +130,40 @@ object StreamingIngest {
    * arrivals emit nothing) into an append-only, batch-partitioned
    * store. The store IS the state: the current corpus is the latest
    * event per doc_id with removals filtered ([[snapshotState]]), so
-   * there is no second state store to keep consistent. Exactly-once
-   * shape: events are derived against state EXCLUDING the batch's own
-   * partition and written with dynamic partition overwrite, so a
-   * replayed batch recomputes identical events and replaces itself
-   * (replays are always of the LATEST batch — checkpoint commits are
-   * sequential). All joins move (doc_id, 32-hex digest) rows — q60's 100 TB
-   * contract; text never reaches a shuffle. Long-lived stores compact
-   * like the agg-maintenance view: fold old partitions into one
-   * snapshot partition with the same latest-event-wins reduction.
+   * there is no second state store to keep consistent. All joins move
+   * (doc_id, 32-hex digest) rows — q60's 100 TB contract; text never
+   * reaches a shuffle. Long-lived stores compact like the agg-maintenance
+   * view: fold old partitions into one snapshot partition with the same
+   * latest-event-wins reduction.
    */
   def startSnapshotDiff(docs: DataFrame, storePath: String,
                         checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        snapshotDiffBatch(batch, storePath, batchId)
-      }
-      .start()
+    drain(docs, checkpointDir)(snapshotDiffBatch(_, storePath, _))
 
   /** The per-batch diff-and-append behind [[startSnapshotDiff]], exposed
     * for direct unit testing (incl. true replays). */
   private[graft] def snapshotDiffBatch(batch: DataFrame, storePath: String,
                                        batchId: Long): Unit = {
-    val spark = batch.sparkSession
     // one version per doc per batch: content beats tombstone, ties
     // break to the max digest — deterministic under any partitioning
     val arrivals = batch
       .select(col("doc_id"),
         when(col("text").isNotNull, md5(col("text"))).as("digest"))
       .groupBy(col("doc_id")).agg(max(col("digest")).as("digest"))
-      .persist()
-    try {
-      if (arrivals.count() == 0) {
-        dropBatchPartition(spark, storePath, batchId); return
-      }
-      val storeExists = new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(storePath))
-      val state =
-        if (!storeExists)
-          arrivals.select(col("doc_id"), col("digest").as("old_digest")).limit(0)
-        else
-          // exclude the batch's own partition: on a true replay the
-          // store already holds this batch's events, and reading them
-          // back would turn every re-arrival into "unchanged"
-          stateAsOf(spark.read.parquet(storePath)
-            .filter(col("_batch_id") =!= batchId))
-            .select(col("doc_id"), col("digest").as("old_digest"))
-      val events = arrivals.join(state, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("digest"),
-          when(col("digest").isNull && col("old_digest").isNotNull,
-            "removed")
-            .when(col("digest").isNotNull && col("old_digest").isNull,
-              "added")
-            .when(col("digest") =!= col("old_digest"), "changed")
-            .as("status"))
-        .filter(col("status").isNotNull)
-      // an empty write on a fresh path would leave a schemaless dir that
-      // wedges every later read; on a REPLAY the previous attempt's
-      // partition must go (a no-change recomputation means the store
-      // already reflects this batch, or drifted — either way batch-id
-      // ownership says this partition holds nothing now)
-      if (events.count() == 0) {
-        dropBatchPartition(spark, storePath, batchId); return
-      }
-      events.withColumn("_batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(storePath)
-    } finally arrivals.unpersist()
+    val state = readStore(batch.sparkSession, storePath,
+        Schemas.batchPartitioned(Schemas.snapshotEventStore))
+      .fold(arrivals.limit(0))(s => stateAsOf(s.filter(col("_batch_id") =!= batchId)))
+      .select(col("doc_id"), col("digest").as("old_digest"))
+    val events = arrivals.join(state, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("digest"),
+        when(col("digest").isNull && col("old_digest").isNotNull,
+          "removed")
+          .when(col("digest").isNotNull && col("old_digest").isNull,
+            "added")
+          .when(col("digest") =!= col("old_digest"), "changed")
+          .as("status"))
+      .filter(col("status").isNotNull)
+    replaceBatchPartition(events, storePath, batchId)
   }
 
   /**
@@ -175,12 +179,8 @@ object StreamingIngest {
    * (session addresses, visitor IPs) differs between captures of the
    * same page, so a raw-text gate re-admits every such re-crawl —
    * d25_scrub_dedup measures a 50% leak on the harness corpus. No raw
-   * text ever touches disk.
+   * text ever touches disk. Store rows are (doc_id, text[scrubbed], fp).
    *
-   * Store/idempotence follow the snapshot-diff protocol: rows are
-   * (doc_id, text[scrubbed], fp) under `_batch_id=` partitions; a
-   * replay recomputes against the store EXCLUDING its own partition
-   * (partition-pruned read) and replaces it via dynamic overwrite.
    * Shuffle discipline at corpus scale: the store-side probe joins the
    * store's fp column against a BROADCAST of the batch's fingerprints
    * (map-side semi-join — the CORPUS never shuffles toward the batch;
@@ -202,13 +202,7 @@ object StreamingIngest {
    */
   def startScrubbedIngest(docs: DataFrame, storePath: String,
                           checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scrubbedIngestBatch(batch, storePath, batchId)
-      }
-      .start()
+    drain(docs, checkpointDir)(scrubbedIngestBatch(_, storePath, _))
 
   /**
    * The linkage-preserving twin of [[startScrubbedIngest]]: identifiers
@@ -220,22 +214,15 @@ object StreamingIngest {
    * [[scrubbedIngestBatch]] verbatim — dedup runs on the PSEUDONYMIZED
    * text's fingerprint (equal identifiers collapse to equal tags, so
    * the volatile-PII re-crawl leak the scrubbed gate closes stays
-   * closed), the store is the same idempotent `_batch_id`-partitioned
-   * (doc_id, text, fp) layout, and no raw identifier ever touches disk.
-   * A blind-scrubbed store has nothing to forget; THIS is the ingest
-   * shape a GDPR-capable corpus runs.
+   * closed), the store layout is the same, and no raw identifier ever
+   * touches disk. A blind-scrubbed store has nothing to forget; THIS is
+   * the ingest shape a GDPR-capable corpus runs.
    */
   def startPseudonymizedIngest(docs: DataFrame, key: String,
                                storePath: String,
                                checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scrubbedIngestBatch(batch, storePath, batchId,
-          scrub = graft.functions.TextFunctions.pseudonymizePii(_, key))
-      }
-      .start()
+    drain(docs, checkpointDir)(scrubbedIngestBatch(_, storePath, _,
+      scrub = TF.pseudonymizePii(_, key)))
 
   /**
    * Streaming right-to-be-forgotten (r16 verdict #4) — deletion
@@ -260,112 +247,80 @@ object StreamingIngest {
   def startDeletionLedgerIngest(requests: DataFrame, storePath: String,
                                 pseudoCol: String, key: String, mac: Boolean,
                                 checkpointDir: String,
-                                derived: Seq[(String, org.apache.spark.sql.Column)] =
-                                  Seq.empty,
+                                derived: Seq[(String, Column)] = Seq.empty,
                                 replacement: String = "<FORGOTTEN>",
-                                freshMillis: Long =
-                                  graft.operators.Rtbf.stagingFreshMillis)
+                                freshMillis: Long = Rtbf.stagingFreshMillis)
       : StreamingQuery =
-    requests.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Rtbf.applyLedgerToStore(batch.sparkSession,
-          storePath, pseudoCol, batch, key, mac, replacement, derived,
-          freshMillis)
-        ()
-      }
-      .start()
+    drain(requests, checkpointDir) { (batch, _) =>
+      Rtbf.applyLedgerToStore(batch.sparkSession, storePath, pseudoCol, batch,
+        key, mac, replacement, derived, freshMillis)
+      ()
+    }
 
   /**
    * Streaming FULL-cascade deletion — the store-FAMILY twin of
    * [[startDeletionLedgerIngest]] (which maintains the corpus store
    * alone): each request micro-batch folds into one
-   * [[graft.operators.Rtbf.cascadeStores]] pass over the release's
-   * whole family — every doc-keyed derived artifact
-   * ([[graft.operators.Rtbf.purgeFromStore]]) and sidecar
-   * ([[graft.operators.Rtbf.purgeSidecar]]) drops the linked docs'
-   * rows FIRST, then the corpus store is rewritten (with `derived`
-   * recomputes, e.g. `fp`) — so after any batch commits, zero derived
-   * rows trace to a forgotten document and a crash mid-batch leaves
-   * the linkage discoverable for the replay (cascadeStores' step
-   * order). The composition contract is inherited: passes are
-   * idempotent and compose, so replayed request batches are no-ops and
-   * any batch split of a ledger converges to the one-batch union apply
-   * — StreamingSpec pins both laws against a twin family. Same
-   * single-maintenance-writer guard per store; a live ingest writing
-   * new `_batch_id` partitions during a pass is picked up by the next
-   * pass, exactly as on the corpus-only form.
+   * [[Rtbf.cascadeStores]] pass over the release's whole family — every
+   * doc-keyed derived artifact ([[Rtbf.purgeFromStore]]) and sidecar
+   * ([[Rtbf.purgeSidecar]]) drops the linked docs' rows FIRST, then the
+   * corpus store is rewritten (with `derived` recomputes, e.g. `fp`) —
+   * so after any batch commits, zero derived rows trace to a forgotten
+   * document and a crash mid-batch leaves the linkage discoverable for
+   * the replay (cascadeStores' step order). The composition contract is
+   * inherited: passes are idempotent and compose, so replayed request
+   * batches are no-ops and any batch split of a ledger converges to the
+   * one-batch union apply — StreamingSpec pins both laws against a twin
+   * family. Same single-maintenance-writer guard per store; a live
+   * ingest writing new `_batch_id` partitions during a pass is picked
+   * up by the next pass, exactly as on the corpus-only form.
    */
   def startCascadeLedgerIngest(requests: DataFrame, storePath: String,
                                pseudoCol: String, key: String, mac: Boolean,
                                checkpointDir: String,
-                               derived: Seq[(String, org.apache.spark.sql.Column)] =
-                                 Seq.empty,
+                               derived: Seq[(String, Column)] = Seq.empty,
                                artifactStores: Seq[(String, String)] = Seq.empty,
                                sidecars: Seq[(String, String)] = Seq.empty,
                                docIdCol: String = "doc_id",
                                replacement: String = "<FORGOTTEN>",
-                               freshMillis: Long =
-                                 graft.operators.Rtbf.stagingFreshMillis)
+                               freshMillis: Long = Rtbf.stagingFreshMillis)
       : StreamingQuery =
-    requests.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Rtbf.cascadeStores(batch.sparkSession, storePath,
-          pseudoCol, batch, key, mac, replacement, derived, docIdCol,
-          artifactStores, sidecars, freshMillis)
-        ()
-      }
-      .start()
+    drain(requests, checkpointDir) { (batch, _) =>
+      Rtbf.cascadeStores(batch.sparkSession, storePath, pseudoCol, batch, key,
+        mac, replacement, derived, docIdCol, artifactStores, sidecars,
+        freshMillis)
+      ()
+    }
 
   /**
    * The streaming twin of the batch CCNet prefix (CorpusPipeline stages
    * 0–2 with `lmFluency = true`, the d26 stage order): per micro-batch,
    * scrub → quality keep rule → LM-fluency keep gate → exact dedup
-   * (in-batch and vs the store), with [[scrubbedIngestBatch]]'s
-   * idempotent batch-partitioned store underneath. The bigram LM is
-   * trained ONCE on the static curated reference (`refDocs` — given,
-   * not part of the stream) and its tables persisted for the query's
-   * lifetime: they are reference-vocabulary-bounded (SCALE.md wave11 —
-   * 914→961 bigrams across a 100× corpus), so every batch's scoring is
-   * a map-side broadcast probe over the batch's transitions; no
-   * corpus-sized state, no growing join. One
-   * [[graft.operators.LmFluency]] body shared with the oracle-verified
-   * t39/d26 queries and the batch pipeline — StreamingSpec pins
-   * batch/stream row-identity. Callers managing cache lifetime can
-   * train the model themselves and use the Model overload.
+   * (in-batch and vs the store), with [[scrubbedIngestBatch]]'s store
+   * underneath. The caller trains the bigram LM ONCE on the static
+   * curated reference (given, not part of the stream), persists its
+   * tables for the query's lifetime and unpersists them after: they are
+   * reference-vocabulary-bounded (SCALE.md wave11 — 914→961 bigrams
+   * across a 100× corpus), so every batch's scoring is a map-side
+   * broadcast probe over the batch's transitions; no corpus-sized
+   * state, no growing join. One [[LmFluency]] body shared with the
+   * oracle-verified t39/d26 queries and the batch pipeline —
+   * StreamingSpec pins batch/stream row-identity.
    */
-  def startFluencyGatedIngest(docs: DataFrame, refDocs: DataFrame,
+  def startFluencyGatedIngest(docs: DataFrame, model: LmFluency.Model,
                               storePath: String,
                               checkpointDir: String): StreamingQuery =
-    startFluencyGatedIngest(docs,
-      graft.operators.LmFluency.train(refDocs).persisted(),
-      storePath, checkpointDir)
-
-  def startFluencyGatedIngest(docs: DataFrame,
-                              model: graft.operators.LmFluency.Model,
-                              storePath: String,
-                              checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scrubbedIngestBatch(batch, storePath, batchId, fluencyGate(model))
-      }
-      .start()
+    drain(docs, checkpointDir)(scrubbedIngestBatch(_, storePath, _,
+      fluencyGate(model)))
 
   /** The quality + LM-fluency keep stages over a scrubbed, versioned
     * batch — TF.qualityKeep (the t06/CorpusPipeline rule) then
     * LmFluency's cross-multiplied integer keep gate; the semi-join's
     * right side is batch-bounded. */
-  private[graft] def fluencyGate(model: graft.operators.LmFluency.Model)(
+  private[graft] def fluencyGate(model: LmFluency.Model)(
       scrubbed: DataFrame): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
     val q = scrubbed.filter(TF.qualityKeep(col("text")))
-    val keep = graft.operators.LmFluency
-      .scoreWith(model, q.select(col("doc_id"), col("text")))
+    val keep = LmFluency.scoreWith(model, q.select(col("doc_id"), col("text")))
       .filter(col("keep")).select(col("doc_id"))
     q.join(broadcast(keep), Seq("doc_id"), "left_semi")
   }
@@ -382,60 +337,36 @@ object StreamingIngest {
    * shingles ⇒ identical contamination), but the pin keeps the gate
    * aligned with the near-dup-capable batch stages, where a cluster's
    * survivor and its victims CAN differ in contamination and the order
-   * is semantics. The eval shingle set is built ONCE from the static
-   * held-out suite and broadcast (eval suites are curated and small);
-   * per-batch cost is the batch's own shingles probing it map-side —
-   * no growing state, same boundedness as the LM tables. StreamingSpec
-   * pins row-identity with the batch composition of the same bodies.
+   * is semantics. The caller builds the eval shingle set ONCE
+   * ([[evalShingleSet]]) and owns the lifetimes of it and of the model,
+   * as in [[startFluencyGatedIngest]]; eval suites are curated and
+   * small, so the set is broadcast and per-batch cost is the batch's own
+   * shingles probing it map-side — no growing state, same boundedness as
+   * the LM tables. StreamingSpec pins row-identity with the batch
+   * composition of the same bodies.
    */
-  def startCorpusGatedIngest(docs: DataFrame, refDocs: DataFrame,
-                             evalDocs: DataFrame, storePath: String,
+  def startCorpusGatedIngest(docs: DataFrame, model: LmFluency.Model,
+                             evalSet: DataFrame, storePath: String,
                              checkpointDir: String): StreamingQuery =
-    startCorpusGatedIngest(docs,
-      graft.operators.LmFluency.train(refDocs).persisted(),
-      evalShingleSet(evalDocs).persist(),
-      storePath, checkpointDir)
+    drain(docs, checkpointDir)(scrubbedIngestBatch(_, storePath, _,
+      fluencyGate(model), decontaminationGate(evalSet)))
 
   /** The held-out suite's 5-gram shingle set in SCRUBBED space — both
     * sides of the contamination compare must live in the same text
-    * space (CorpusPipeline's note). Exposed so callers of the
-    * caller-managed overload below build the SAME set the convenience
-    * form does. NOT persisted here — the caller owns the lifetime. */
-  def evalShingleSet(evalDocs: DataFrame): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
+    * space (CorpusPipeline's note). NOT persisted here — the caller owns
+    * the lifetime. */
+  def evalShingleSet(evalDocs: DataFrame): DataFrame =
     evalDocs
       .select(TF.scrubPii(col("text")).as("text"))
       .select(explode(graft.functions.Hashing.shingleHashSet(
         TF.tokens(col("text")), 5)).as("s"))
       .distinct()
-  }
-
-  /** Caller-managed-lifetime overload (ADVICE r16: the convenience form
-    * above persists the LM tables and eval set for the SESSION's
-    * lifetime — repeated query starts in one session would accumulate
-    * cached frames). Here the caller trains/persists the model and
-    * builds/persists the eval set, and unpersists both when the query
-    * terminates — mirroring [[startFluencyGatedIngest]]'s Model
-    * overload. */
-  def startCorpusGatedIngest(docs: DataFrame,
-                             model: graft.operators.LmFluency.Model,
-                             evalSet: DataFrame, storePath: String,
-                             checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scrubbedIngestBatch(batch, storePath, batchId, fluencyGate(model),
-          decontaminationGate(evalSet))
-      }
-      .start()
 
   /** Drop the admitted rows sharing any 5-gram shingle with the
     * broadcast eval set — the per-batch decontamination stage. `hit`
     * is batch-bounded (ids of contaminated arrivals). */
   private[graft] def decontaminationGate(evalSet: DataFrame)(
       admitted: DataFrame): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
     val hit = admitted
       .select(col("doc_id"), explode(graft.functions.Hashing.shingleHashSet(
         TF.tokens(col("text")), 5)).as("s"))
@@ -445,25 +376,22 @@ object StreamingIngest {
   }
 
   /** The per-batch scrub-and-gate behind [[startScrubbedIngest]] and
-    * [[startFluencyGatedIngest]], exposed for direct unit testing
-    * (incl. true replays). `gate` filters the scrubbed, versioned batch
-    * BEFORE the exact-dedup stages (the CCNet order: heuristic quality
-    * and LM fluency run on scrubbed text, dedup sees only survivors);
-    * the default identity gate is the plain scrubbed ingest. */
+    * its gated twins, exposed for direct unit testing (incl. true
+    * replays). `gate` filters the scrubbed, versioned batch BEFORE the
+    * exact-dedup stages (the CCNet order: heuristic quality and LM
+    * fluency run on scrubbed text, dedup sees only survivors); the
+    * default identity gate is the plain scrubbed ingest. */
   private[graft] def scrubbedIngestBatch(batch: DataFrame, storePath: String,
                                          batchId: Long,
                                          gate: DataFrame => DataFrame = identity,
                                          postGate: DataFrame => DataFrame = identity,
-                                         scrub: org.apache.spark.sql.Column =>
-                                           org.apache.spark.sql.Column =
-                                           graft.functions.TextFunctions.scrubPii)
+                                         scrub: Column => Column = TF.scrubPii)
       : Unit = {
-    val spark = batch.sparkSession
-    import graft.functions.{TextFunctions => TF}
     // one version per doc per batch (same defense as snapshotDiffBatch:
     // a doc re-emitted across two files of one AvailableNow trigger must
     // not land twice) — max (fp, text) struct is deterministic under any
-    // partitioning, and fp is the text's md5 so the pair is consistent
+    // partitioning, and fp is the text's md5 so the pair is consistent.
+    // Persisted: the survivor choice and the final semi-join both read it
     val scrubbed = gate(batch
       .withColumn("text", scrub(col("text")))
       .withColumn("fp", TF.fingerprint(col("text")))
@@ -472,42 +400,24 @@ object StreamingIngest {
       .select(col("doc_id"), col("m.text").as("text"), col("m.fp").as("fp")))
       .persist()
     try {
-      if (scrubbed.count() == 0) {
-        dropBatchPartition(spark, storePath, batchId); return
-      }
       // in-batch survivor: min doc_id per scrubbed fingerprint
       val keep = scrubbed.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      val storeExists = new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(storePath))
-      val admitted =
-        if (!storeExists) keep
-        else {
-          // store-side probe: corpus fps scan map-side against the
-          // broadcast batch fp set; `hits` is batch-bounded
-          val hits = spark.read.parquet(storePath)
-            .filter(col("_batch_id") =!= batchId) // replay: own partition out
-            .select(col("fp"))
-            .join(broadcast(keep.select(col("fp"))), Seq("fp"), "left_semi")
-            .distinct()
-          keep.join(broadcast(hits), Seq("fp"), "left_anti")
-        }
+      val admitted = readStore(batch.sparkSession, storePath,
+          Schemas.batchPartitioned(Schemas.scrubbedStore)).fold(keep) { store =>
+        // store-side probe: corpus fps scan map-side against the
+        // broadcast batch fp set; `hits` is batch-bounded
+        val hits = store.filter(col("_batch_id") =!= batchId)
+          .select(col("fp"))
+          .join(broadcast(keep.select(col("fp"))), Seq("fp"), "left_semi")
+          .distinct()
+        keep.join(broadcast(hits), Seq("fp"), "left_anti")
+      }
       // `postGate` filters the DEDUP SURVIVORS (d26's stage order —
       // decontamination runs after survivor selection, with which it
       // does not commute); identity for the plain/fluency gates
-      val rows = postGate(scrubbed
-        .join(broadcast(admitted.select(col("doc_id"))), Seq("doc_id"), "left_semi"))
-      // an empty write on a fresh path would leave a schemaless dir that
-      // wedges every later read; an empty REPLAY must also drop what the
-      // previous attempt wrote (see dropBatchPartition)
-      if (rows.count() == 0) {
-        dropBatchPartition(spark, storePath, batchId); return
-      }
-      rows.withColumn("_batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(storePath)
+      replaceBatchPartition(postGate(scrubbed
+          .join(broadcast(admitted.select(col("doc_id"))), Seq("doc_id"), "left_semi")),
+        storePath, batchId)
     } finally scrubbed.unpersist()
   }
 
@@ -540,70 +450,53 @@ object StreamingIngest {
   /**
    * Streaming incremental materialized-view maintenance — the streaming
    * twin of batch j04: each micro-batch reduces to per-key PARTIAL
-   * aggregates (count + exact DECIMAL sum — the ⊕-mergeable form) and
-   * overwrites ONLY its own `_batch_id` partition, so a replayed batch
-   * replaces itself instead of double-adding — exactly-once without
-   * read-modify-write on the store. The maintained view is
-   * [[aggView]]'s ⊕-merge of the partials at read; periodic compaction
-   * (fold old partitions with the same ⊕) bounds partition count
-   * without changing the result — for THIS sum-based store it must run
-   * as write-new-generation-then-switch (a duplicate sum partial
-   * double-counts; contrast [[compactDistinctStore]], whose idempotent
-   * register ⊕ earns the cheaper in-place protocol). Write path is
-   * append-only and carries
-   * only (key, n, tot) rows — batch-sized, never corpus-sized.
+   * aggregates (count + exact DECIMAL sum — the ⊕-mergeable form) in its
+   * own partition, so a replayed batch replaces itself instead of
+   * double-adding — exactly-once without read-modify-write on the store.
+   * The maintained view is [[aggView]]'s ⊕-merge of the partials at
+   * read; periodic compaction (fold old partitions with the same ⊕)
+   * bounds partition count without changing the result — for THIS
+   * sum-based store it must run as write-new-generation-then-switch (a
+   * duplicate sum partial double-counts; contrast
+   * [[compactDistinctStore]], whose idempotent register ⊕ earns the
+   * cheaper in-place protocol). The write path carries only
+   * (key, n, tot) rows — batch-sized, never corpus-sized.
    */
   def startAggMaintenance(events: DataFrame, storePath: String,
                           checkpointDir: String,
                           keyCol: String = "user_id",
                           valCol: String = "value"): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col(keyCol))
+    drain(events, checkpointDir) { (batch, batchId) =>
+      replaceBatchPartition(batch.groupBy(col(keyCol))
           .agg(count(lit(1)).as("n"),
             sum(col(valCol).cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-              .as("tot"))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id")
-          .parquet(storePath)
-      }
-      .start()
+              .as("tot")),
+        storePath, batchId)
+      ()
+    }
 
   /**
    * Continuously-maintained distinct-count — the streaming form of
    * a04/a09's HLL tier: each micro-batch folds to its (key, register)
-   * maxima partials and lands in its own `_batch_id` partition
-   * ([[startAggMaintenance]]'s exactly-once shape). Registers have a
-   * property plain sums lack: the merge ⊕ is element-wise MAX —
-   * idempotent AND commutative — so even a batch written TWICE under
-   * different batch ids (a failure mode the partition trick exists to
-   * prevent for sums) cannot move the merged view. The view
-   * ([[distinctView]]) is a register merge + harmonic estimate at
-   * read; store growth is 64 rows × keys per batch regardless of
-   * event volume, and compaction (fold partitions with the same max)
-   * never changes the result.
+   * maxima partials in its own partition. Registers have a property
+   * plain sums lack: the merge ⊕ is element-wise MAX — idempotent AND
+   * commutative — so even a batch written TWICE under different batch
+   * ids (a failure mode the partition ownership exists to prevent for
+   * sums) cannot move the merged view. The view ([[distinctView]]) is a
+   * register merge + harmonic estimate at read; store growth is 64 rows
+   * × keys per batch regardless of event volume, and compaction (fold
+   * partitions with the same max) never changes the result.
    */
   def startDistinctMaintenance(events: DataFrame, storePath: String,
                                checkpointDir: String,
                                keyCol: String = "event_type",
                                idCol: String = "user_id"): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.Queries.hllRegisters(
-            batch.withColumnRenamed(idCol, "user_id"), Seq(keyCol))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id")
-          .parquet(storePath)
-      }
-      .start()
+    drain(events, checkpointDir) { (batch, batchId) =>
+      replaceBatchPartition(graft.Queries.hllRegisters(
+          batch.withColumnRenamed(idCol, "user_id"), Seq(keyCol)),
+        storePath, batchId)
+      ()
+    }
 
   /**
    * Compact the register store behind [[startDistinctMaintenance]]:
@@ -670,8 +563,7 @@ object StreamingIngest {
     * between write-commit and delete is directly unit-testable. */
   private[graft] def compactDistinctFold(spark: SparkSession, storePath: String,
                                          keyCol: String = "event_type")
-      : Seq[org.apache.hadoop.fs.Path] = {
-    import org.apache.hadoop.fs.Path
+      : Seq[Path] = {
     val root = new Path(storePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
@@ -695,7 +587,7 @@ object StreamingIngest {
     // caveat: the compactor compares its own clock against FS mtimes —
     // gross clock skew erodes the margin; the gate leaves room for sane
     // NTP drift, not for an unsynchronized fleet.)
-    def newestMtime(p: org.apache.hadoop.fs.Path): Long = {
+    def newestMtime(p: Path): Long = {
       val st = fs.getFileStatus(p)
       if (!st.isDirectory) st.getModificationTime
       else (st.getModificationTime +:
@@ -739,13 +631,11 @@ object StreamingIngest {
     // {gen, batches…} claims the other of {−1, −2}, so a quiescent
     // store converges to `_batch_id=-1` instead of minting gen−1 forever
     val gen = Iterator.from(1).map(-_.toLong).find(!ids.contains(_)).get
-    spark.read.parquet(snapshot.map(_._1.toString).toSeq: _*)
-      .groupBy(col(keyCol), col("j")).agg(max(col("m_j")).as("m_j"))
-      .withColumn("_batch_id", lit(gen))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(storePath)
+    Sinks.overwritePartitions(
+      spark.read.parquet(snapshot.map(_._1.toString).toSeq: _*)
+        .groupBy(col(keyCol), col("j")).agg(max(col("m_j")).as("m_j"))
+        .withColumn("_batch_id", lit(gen)),
+      "_batch_id", storePath)
     snapshot.map(_._1).toSeq
   }
 
@@ -776,33 +666,22 @@ object StreamingIngest {
   def startTopKMaintenance(rows: DataFrame, storePath: String,
                            checkpointDir: String, k: Int,
                            orderCol: String, tieCol: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        topKMergeBatch(batch, storePath, k, orderCol, tieCol)
-      }
-      .start()
+    drain(rows, checkpointDir)((batch, _) =>
+      topKMergeBatch(batch, storePath, k, orderCol, tieCol))
 
   /** The per-batch read-merge-reduce-overwrite behind
     * [[startTopKMaintenance]], exposed so a replay (same batch applied
-    * again after a successful store write) can be unit-tested directly. */
+    * again after a successful store write) can be unit-tested directly.
+    * The table is written with the batch's own schema, so it is read
+    * back under that schema. */
   private[graft] def topKMergeBatch(batch: DataFrame, storePath: String,
                                     k: Int, orderCol: String,
                                     tieCol: String): Unit = {
     val spark = batch.sparkSession
     val batchTop = batch
       .orderBy(col(orderCol).desc, col(tieCol)).limit(k)
-    // probe existence explicitly: a catch-all here would also swallow
-    // real read failures (corrupt footer, transient FS error) and
-    // silently overwrite the accumulated top-k with just this batch —
-    // those must fail the batch so the checkpoint retries it
-    val storeExists = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(storePath))
-    val merged =
-      if (storeExists) batchTop.unionByName(spark.read.parquet(storePath))
-      else batchTop
+    val merged = readStore(spark, storePath, batch.schema)
+      .fold(batchTop)(batchTop.unionByName(_))
     // dropDuplicates BEFORE the reduce: a replayed batch's rows are exact
     // copies of rows already in the store and must not take extra slots
     // materialize BEFORE overwriting — the store is an input here
@@ -823,14 +702,11 @@ object StreamingIngest {
    * ONE scan of the stored sketch column — no corpus self-join, same
    * shape as s07), near-duplicates (max cosine ≥ `simThreshold` against
    * the index OR against an earlier row of the same batch) are DROPPED,
-   * and survivors append to the index under their own `_batch_id`
-   * partition — so a replayed batch replaces itself (idempotent, like
-   * [[startIdempotentAppend]]) and the store doubles as the sketch
-   * index for the next batch. Store rows carry (vec_id, embedding,
-   * sig); per-batch cost is O(|index|·|batch|) popcounts +
-   * O(|batch|·cands) exact dots.
-   */
-  /**
+   * and survivors land in the batch's own partition, so the store
+   * doubles as the sketch index for the next batch. Store rows carry
+   * (vec_id, embedding, sig); per-batch cost is O(|index|·|batch|)
+   * popcounts + O(|batch|·cands) exact dots.
+   *
    * `nCells = Some(c)` switches the index probe from the brute
    * batch × index scan to coarse-cell bucketed candidates (the s10
    * machinery, operators/AnnJoin): only index rows co-resident with a
@@ -853,14 +729,8 @@ object StreamingIngest {
                              cands: Int = 32,
                              nCells: Option[Int] = None,
                              probes: Int = 2): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        vectorDedupBatch(batch, storePath, batchId, simThreshold, dim,
-          nBits, cands, nCells, probes)
-      }
-      .start()
+    drain(vectors, checkpointDir)(vectorDedupBatch(_, storePath, _,
+      simThreshold, dim, nBits, cands, nCells, probes))
 
   /** The per-batch probe-filter-append behind [[startVectorDedupIngest]],
     * exposed for direct unit testing (incl. true replays). */
@@ -870,7 +740,6 @@ object StreamingIngest {
                                       cands: Int,
                                       nCells: Option[Int] = None,
                                       probes: Int = 2): Unit = {
-    import graft.functions.{VectorFunctions => VF}
     val spark = batch.sparkSession
     val b = batch
       .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
@@ -881,102 +750,64 @@ object StreamingIngest {
     // foreachBatch and the query retries — without the finally each failed
     // attempt would leak one persisted batch into the long-lived session
     try {
-    // an EMPTY batch must write nothing: a zero-row partitioned write on
-    // a fresh storePath creates a schemaless directory that wedges every
-    // later batch's read (UNABLE_TO_INFER_SCHEMA, retried forever) —
-    // but a REPLAY that recomputes to empty must still drop the
-    // previous attempt's partition (same ghost-partition hazard as the
-    // scrubbed/CDC gates; phantom sidecar rows from the dropped
-    // partition are harmless — the inner sig join discards them —
-    // pinned by the BUCKETED empty-replay test: orphans neither
-    // phantom-drop a re-ingested near-dup of the dropped vector nor
-    // perturb live-row decisions, including after the whole store root
-    // is removed under a surviving sidecar)
-    if (b.count() == 0) {
-      dropBatchPartition(spark, storePath, batchId); return
-    }
-    val storeExists = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(storePath))
+    val store = readStore(spark, storePath, Schemas.batchPartitioned(Schemas.vectorStore))
+      .map(_.filter(col("_batch_id") =!= batchId))
+    def cellsOf(df: DataFrame, nc: Int) = AnnJoin.cellAssignments(
+        df, "vec_id", "embedding", dim, nc, probes)
+      .select(col("id").as("vec_id"), col("cell"))
+    // phantom sidecar rows (cells of vec_ids a replay or an all-dropped
+    // batch removed from the store) are harmless: every read joins them
+    // back against the store, which has no such row; duplicate rows
+    // collapse in the candidate distinct
+    val sidecar = nCells.flatMap(nc =>
+      readStore(spark, s"${storePath}_cells_n$nc", Schemas.vectorCells))
+    // index rows the sidecar does not cover yet (a brute-era store's
+    // first bucketed batch, or rows landed outside the gate)
+    def uncovered(idx: DataFrame) =
+      sidecar.fold(idx)(sc => idx.join(sc.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     // max cosine of each batch vector against the index: sketch top-C
     // candidates from a genuinely NARROW probe — the hamming pass reads
     // only (vec_id, sig) from the store; full vectors are joined back
     // for the ≤ |batch|·cands candidate pairs only, with each side's
     // norm computed once
-    val dupVsIndex =
-      if (!storeExists) b.select(col("vec_id")).limit(0)
-      else {
-        // a replayed batch's own partition must not count as "the
-        // index" — otherwise every replayed row sees itself stored
-        // and the whole batch is dropped instead of replaced
-        val store = spark.read.parquet(storePath)
-          .filter(col("_batch_id") =!= batchId)
-        val hams = nCells match {
-          case Some(nc) =>
-            // bucketed probe: batch rows meet only co-resident index
-            // rows (cell equi-join — shuffles the candidate set, never
-            // the whole index against every batch row). Index-side
-            // cells come from the SIDECAR (appended at survivor-write
-            // time, below) — per-batch index work is a narrow
-            // (vec_id, cell) scan plus cell computation only for rows
-            // the sidecar does not cover yet (a brute-era store's first
-            // bucketed batch, or rows landed outside the gate). Phantom
-            // sidecar rows (replaced replays) are dropped by the inner
-            // sig join; duplicate sidecar rows collapse in the
-            // candidate distinct.
-            import graft.operators.AnnJoin
-            val bCells = AnnJoin.cellAssignments(
-                b.select(col("vec_id"), col("v").as("embedding")),
-                "vec_id", "embedding", dim, nc, probes)
-              .select(col("id").as("vec_id"), col("cell"))
-            val cellsPath = s"${storePath}_cells_n$nc"
-            val sidecar =
-              if (new org.apache.hadoop.fs.Path(cellsPath)
-                    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-                    .exists(new org.apache.hadoop.fs.Path(cellsPath)))
-                Some(spark.read.parquet(cellsPath))
-              else None
-            val uncovered = sidecar match {
-              case Some(sc) =>
-                store.join(sc.select(col("vec_id")), Seq("vec_id"), "left_anti")
-              case None => store
-            }
-            val computed = AnnJoin.cellAssignments(
-                uncovered.select(col("vec_id"), col("embedding")),
-                "vec_id", "embedding", dim, nc, probes)
-              .select(col("id").as("vec_id"), col("cell"))
-            val iCells = sidecar
-              .map(_.select(col("vec_id"), col("cell")).unionByName(computed))
-              .getOrElse(computed)
-              .select(col("vec_id").as("idx_id"), col("cell"))
-            bCells.join(iCells, Seq("cell"))
-              .select(col("vec_id"), col("idx_id")).distinct()
-              .join(broadcast(b.select(col("vec_id"), col("sig"))), Seq("vec_id"))
-              .join(store.select(col("vec_id").as("idx_id"),
-                col("sig").as("idx_sig")), Seq("idx_id"))
-              .select(col("vec_id"), col("idx_id"),
-                VF.hammingSig(col("sig"), col("idx_sig")).as("ham"))
-          case None =>
-            store.select(col("vec_id").as("idx_id"), col("sig").as("idx_sig"))
-              .crossJoin(broadcast(b.select(col("vec_id"), col("sig"))))
-              .select(col("vec_id"), col("idx_id"),
-                VF.hammingSig(col("sig"), col("idx_sig")).as("ham"))
-        }
-        val cand = graft.operators.Relational.topKPerKey(hams, Seq("vec_id"),
-          Seq(col("ham").asc, col("idx_id").asc), cands)
-        val idxVec = store.select(col("vec_id").as("idx_id"),
-          VF.toDouble(col("embedding")).as("idx_v"))
-          .withColumn("idx_nrm", sqrt(VF.normSq(col("idx_v"))))
-        cand
-          .join(idxVec, Seq("idx_id"))
-          .join(b.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-          .select(col("vec_id"),
-            (VF.dot(col("v"), col("idx_v")) / (col("nrm") * col("idx_nrm")))
-              .as("sim"))
-          .groupBy(col("vec_id")).agg(max(col("sim")).as("max_sim"))
-          .filter(col("max_sim") >= simThreshold)
-          .select(col("vec_id"))
+    val dupVsIndex = store.fold(b.select(col("vec_id")).limit(0)) { store =>
+      val hams = nCells match {
+        case Some(nc) =>
+          // bucketed probe: batch rows meet only co-resident index rows
+          // (cell equi-join — shuffles the candidate set, never the
+          // whole index against every batch row)
+          val bCells = cellsOf(b.select(col("vec_id"), col("v").as("embedding")), nc)
+          val computed = cellsOf(uncovered(store).select(col("vec_id"), col("embedding")), nc)
+          val iCells = sidecar.fold(computed)(_.unionByName(computed))
+            .select(col("vec_id").as("idx_id"), col("cell"))
+          bCells.join(iCells, Seq("cell"))
+            .select(col("vec_id"), col("idx_id")).distinct()
+            .join(broadcast(b.select(col("vec_id"), col("sig"))), Seq("vec_id"))
+            .join(store.select(col("vec_id").as("idx_id"),
+              col("sig").as("idx_sig")), Seq("idx_id"))
+            .select(col("vec_id"), col("idx_id"),
+              VF.hammingSig(col("sig"), col("idx_sig")).as("ham"))
+        case None =>
+          store.select(col("vec_id").as("idx_id"), col("sig").as("idx_sig"))
+            .crossJoin(broadcast(b.select(col("vec_id"), col("sig"))))
+            .select(col("vec_id"), col("idx_id"),
+              VF.hammingSig(col("sig"), col("idx_sig")).as("ham"))
       }
+      val cand = graft.operators.Relational.topKPerKey(hams, Seq("vec_id"),
+        Seq(col("ham").asc, col("idx_id").asc), cands)
+      val idxVec = store.select(col("vec_id").as("idx_id"),
+        VF.toDouble(col("embedding")).as("idx_v"))
+        .withColumn("idx_nrm", sqrt(VF.normSq(col("idx_v"))))
+      cand
+        .join(idxVec, Seq("idx_id"))
+        .join(b.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
+        .select(col("vec_id"),
+          (VF.dot(col("v"), col("idx_v")) / (col("nrm") * col("idx_nrm")))
+            .as("sim"))
+        .groupBy(col("vec_id")).agg(max(col("sim")).as("max_sim"))
+        .filter(col("max_sim") >= simThreshold)
+        .select(col("vec_id"))
+    }
     // within-batch near-dups, anchored on the batch rows that SURVIVED
     // the index probe: a row dropped as an index near-dup must not also
     // drag down later batch rows that are NOT near anything stored (the
@@ -991,63 +822,28 @@ object StreamingIngest {
         VF.dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))
           >= simThreshold)
       .select(col("x.vec_id")).distinct()
+    // persisted: the store write and the sidecar step both read it
     val survivors = b
       .join(dupVsIndex, Seq("vec_id"), "left_anti")
       .join(dupInBatch, Seq("vec_id"), "left_anti")
       .select(col("vec_id"),
         transform(col("v"), x => x.cast("float")).as("embedding"), col("sig"))
-      .withColumn("_batch_id", lit(batchId))
       .persist()
     try {
-    // all-dup batches write nothing, so a REPLAY whose recomputation
-    // keeps no survivor must drop the previous attempt's partition
-    // (possible only when a store exists — a fresh batch always keeps
-    // its min-id anchor). Stale sidecar cells for the dropped vec_ids
-    // are harmless: the probe joins them against the store and finds
-    // no row.
-    if (survivors.count() == 0) {
-      dropBatchPartition(spark, storePath, batchId); return
-    }
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(storePath)
     // sidecar maintenance for the bucketed probe: append the cells of
     // (a) this batch's survivors and (b) any store rows the sidecar
     // does not cover yet (converges a brute-era store after one
     // bucketed batch). Append-only and self-healing: a crash between
     // the store write and this append only means those rows' cells are
-    // recomputed on later batches; replayed batches may append
-    // duplicate rows, which collapse in the probe's candidate distinct.
-    nCells.foreach { nc =>
-      import graft.operators.AnnJoin
-      val cellsPath = s"${storePath}_cells_n$nc"
-      def cellsOf(df: DataFrame) = AnnJoin.cellAssignments(
-          df, "vec_id", "embedding", dim, nc, probes)
-        .select(col("id").as("vec_id"), col("cell"))
-      val survCells = cellsOf(survivors.select(col("vec_id"), col("embedding")))
-      val fs = new org.apache.hadoop.fs.Path(cellsPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sidecarExists = fs.exists(new org.apache.hadoop.fs.Path(cellsPath))
-      val gap =
-        if (!storeExists) survCells.limit(0)
-        else {
-          val idx = spark.read.parquet(storePath)
-            .filter(col("_batch_id") =!= batchId)
-          val uncovered =
-            if (sidecarExists)
-              idx.join(spark.read.parquet(cellsPath).select(col("vec_id")),
-                Seq("vec_id"), "left_anti")
-            else idx
-          cellsOf(uncovered.select(col("vec_id"), col("embedding")))
-        }
-      val toAppend = survCells.unionByName(gap).persist()
-      try {
-        // zero-row guard: an empty parquet dir would wedge later reads
-        if (toAppend.limit(1).count() > 0)
-          toAppend.write.mode("append").parquet(cellsPath)
-      } finally toAppend.unpersist()
-    }
+    // recomputed on later batches. A batch that admitted nothing has no
+    // cells to add, and a non-empty append never leaves an empty dir.
+    if (replaceBatchPartition(survivors, storePath, batchId) > 0)
+      nCells.foreach { nc =>
+        val cells = cellsOf(survivors.select(col("vec_id"), col("embedding")), nc)
+        store.fold(cells)(idx => cells.unionByName(
+            cellsOf(uncovered(idx).select(col("vec_id"), col("embedding")), nc)))
+          .write.mode("append").parquet(s"${storePath}_cells_n$nc")
+      }
     } finally survivors.unpersist()
     } finally b.unpersist()
   }

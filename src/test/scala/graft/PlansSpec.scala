@@ -233,7 +233,7 @@ class PlansSpec extends AnyFunSuite {
   test("hive-partitioned layout prunes partitions at the scan (PartitionFilters)") {
     val root = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/t"
     val df = (1 to 90).map(i => (s"2024-01-0${i % 3 + 1}", i.toLong)).toDF("dt", "v")
-    graft.sinks.Sinks.idempotentDailyAppend(df, "dt", root)
+    graft.sinks.Sinks.overwritePartitions(df, "dt", root)
     // layout: one dt=... directory per partition value
     val dirs = new java.io.File(root).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.toSeq == Seq("dt=2024-01-01", "dt=2024-01-02", "dt=2024-01-03"))

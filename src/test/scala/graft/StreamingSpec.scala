@@ -1644,4 +1644,91 @@ class StreamingSpec extends AnyFunSuite {
       Seq((0L, 5L), (1L, 0L)), s"timeout scores before evicting: $tOut")
     assert(timedOut.isRemoved, "idle key leaves the state store")
   }
+
+  test("an empty first micro-batch leaves no store root, and the next " +
+       "batch's view equals a full recompute (plain append, agg and " +
+       "distinct maintenance)") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    val events = Seq(("view", 1L, 10.0), ("click", 2L, 5.0), ("view", 2L, 7.0))
+    val all = events.toDF("event_type", "user_id", "value")
+    def rows(df: DataFrame): Set[Row] = df.collect().toSet
+    val cases = Seq[(String, (DataFrame, String, String) => StreamingQuery,
+                     String => Set[Row], Set[Row])](
+      ("plain append", StreamingIngest.startIdempotentAppend(_, _, _),
+        store => rows(spark.read.parquet(store)
+          .select(col("event_type"), col("user_id"), col("value"))),
+        rows(all)),
+      ("agg maintenance", StreamingIngest.startAggMaintenance(_, _, _),
+        store => rows(StreamingIngest.aggView(spark, store)),
+        rows(all.groupBy(col("user_id")).agg(count(lit(1)).as("n"),
+          sum(col("value")).as("sum_value")))),
+      ("distinct maintenance", StreamingIngest.startDistinctMaintenance(_, _, _),
+        store => rows(StreamingIngest.distinctView(spark, store)),
+        rows(graft.Queries.hllEstimate(
+            graft.Queries.hllRegisters(all, Seq("event_type")), Seq("event_type"))
+          .select(col("event_type"), graft.Queries.hllHarmonic.as("est_distinct")))))
+    for ((name, start, view, expected) <- cases) {
+      val root = Files.createTempDirectory("graft_empty_first").toString
+      val landing = s"$root/landing"; val store = s"$root/store"; val ckpt = s"$root/ckpt"
+      new java.io.File(landing).mkdirs()
+      def drain(): Unit = start(spark.readStream
+        .schema("event_type STRING, user_id LONG, value DOUBLE").csv(landing),
+        store, ckpt).awaitTermination()
+      Files.write(java.nio.file.Paths.get(s"$landing/b0.csv"), Array.emptyByteArray)
+      drain()
+      assert(new java.io.File(s"$ckpt/commits/0").exists, s"$name: batch 0 never ran")
+      assert(!new java.io.File(store).exists,
+        s"$name: an empty batch 0 left a store root behind")
+      Files.write(java.nio.file.Paths.get(s"$landing/b1.csv"),
+        events.map { case (k, u, v) => s"$k,$u,$v" }.mkString("\n").getBytes("UTF-8"))
+      drain()
+      assert(view(store) == expected, s"$name: view after batch 1")
+    }
+  }
+
+  test("a batch write that throws fails the query with its own exception") {
+    val root = Files.createTempDirectory("graft_failed_write").toString
+    val landing = s"$root/landing"
+    new java.io.File(landing).mkdirs()
+    Files.write(java.nio.file.Paths.get(s"$landing/b0.csv"), "view,1,1.0".getBytes("UTF-8"))
+    val src = spark.readStream.schema("event_type STRING, user_id LONG, value DOUBLE")
+      .csv(landing)
+      .withColumn("value", when(col("user_id") > 0,
+        raise_error(lit("planted write failure"))).otherwise(col("value")))
+    val q = StreamingIngest.startIdempotentAppend(src, s"$root/store", s"$root/ckpt")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    assert(q.exception.exists(e => causes(e).exists(c =>
+        Option(c.getMessage).exists(_.contains("planted write failure")))),
+      s"the query must fail with the write's own exception: ${q.exception}")
+  }
+
+  test("a scrubbed-ingest batch against an existing store runs no job " +
+       "before its write: no guard count() and no footer-inference read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftBridge
+    import spark.implicits._
+    val store = Files.createTempDirectory("graft_scrub_jobs").toString + "/store"
+    def df(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    StreamingIngest.scrubbedIngestBatch(df(1L -> "alpha beta", 2L -> "gamma delta"), store, 0L)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      StreamingIngest.scrubbedIngestBatch(
+        df(11L -> "alpha beta", 12L -> "epsilon zeta"), store, 1L)
+      GraftBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    // the write's own query stages and broadcasts; a guard count() before
+    // it would re-run the probe's stages, and an inferring store read
+    // would add a footer job
+    assert(jobs.get == 11, s"saw ${jobs.get} jobs")
+  }
 }
