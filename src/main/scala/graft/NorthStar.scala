@@ -56,6 +56,37 @@ object NorthStar {
   private def embWide(s: SparkSession, dir: String): DataFrame =
     emb(s, dir).repartition(s.sparkContext.defaultParallelism, col("vec_id"))
 
+  /** The exact all-pairs block self-join of e01, s04 and s06. `t` holds
+    * (vec_id, blk in [0, B)) plus the `payload` columns; every unordered
+    * vector pair falls in exactly one unordered block pair {blk(a),
+    * blk(b)}, so replicating each side once per block pair turns the
+    * O(n²) scan into an equi-join on (bi, bj) with B(B+1)/2 keys — an
+    * ordinary shuffled join (replication factor (B+1)/2, per-task work
+    * (n/B)²), no cartesian. Returns each unordered pair once as
+    * (id_l, <payload>_l, bi, bj, id_r, <payload>_r, ri, rj). */
+  private def blockPairJoin(s: SparkSession, t: DataFrame, B: Int,
+                            payload: Seq[String]): DataFrame = {
+    val blockPairs = {
+      import s.implicits._
+      (for (i <- 0 until B; j <- i until B) yield (i, j)).toDF("bi", "bj")
+    }
+    // the scoring exchange keys on (bi, bj) — B(B+1)/2 keys of tiny
+    // BYTES but quadratic-per-block downstream scoring; pin the
+    // partition count so AQE's byte-based coalescing can't serialize
+    // the scoring onto 1-2 tasks (measured: e01 877 ms on 2 tasks, s06
+    // 1.0 s on ONE task, with 30+ cores idle before the pin)
+    val par = s.sparkContext.defaultParallelism
+    def side(blk: String, sfx: String, i: String, j: String): DataFrame =
+      t.join(broadcast(blockPairs), col("blk") === col(blk))
+        .select((col("vec_id").as(s"id_$sfx") +: payload.map(c => col(c).as(s"${c}_$sfx")))
+          :+ col("bi").as(i) :+ col("bj").as(j): _*)
+        .repartition(par, col(i), col(j))
+    side("bi", "l", "bi", "bj")
+      .join(side("bj", "r", "ri", "rj"), col("bi") === col("ri") && col("bj") === col("rj"))
+      // diagonal blocks would otherwise emit both orientations
+      .filter(col("bi") =!= col("bj") || col("id_l") < col("id_r"))
+  }
+
   /** Per-vector prototypicality scoring shared by e09 (prune the MOST
     * prototypical) and e14 (sample the LEAST): argmax-dot centroid
     * assignment + cosine to the winning centroid, every centroid value
@@ -638,8 +669,8 @@ object NorthStar {
   // path + MinHash-LSH scale path); the queries below bind it to the
   // harness documents table.
   //
-  // Two intermediates are deliberately long-lived and memoized per
-  // (session, dir) — the same object is reused rather than hoping
+  // The long-lived intermediates are memoized per (session, dir) in
+  // SessionCache — the same object is reused rather than hoping
   // cache-manager canonical-plan matching re-finds it, and nothing is
   // ever re-persisted (no "already cached" churn):
   //  - the shingle-hash table (one sorted long array per doc) feeds both
@@ -648,40 +679,13 @@ object NorthStar {
   //  - the exact pair set feeds THREE queries (d03 emits it, d06
   //    clusters it, d07 picks representatives).
   // Dedup's internal caches are released inside Dedup itself (its pair
-  // detectors materialize eagerly); [[releaseCaches]] frees the two
-  // memoized tables for long-lived sessions.
-  private val hsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val lshPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  // d20's threshold-0.6 pair table (strictly larger than the 0.8 set —
-  // must ride the same lifecycle, not stack a fresh persist per call)
-  private val histPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sketchMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int, Int), DataFrame]
-  /** Drop a stopped session's dedup-tier memo entries (the persisted
-    * blocks died with the context; unpersist would be a no-op). One
-    * [[SessionScope]] hook covers all six memos — registered at the
-    * insertion choke points (hsTable, sigTable, the g01 sketch; the
-    * pair/hist memos only ever hold keys hsTable already hooked). */
-  private def hookSession(s: SparkSession): Unit =
-    SessionScope.onStop("dedup-memos", s) { () =>
-      for (m <- Seq(hsMemo, pairsMemo, lshPairsMemo, histPairsMemo, sketchMemo))
-        m.keys.filter(_._1 == s).foreach(m.remove)
-      sigMemo.keys.filter(_._1 == s).foreach(sigMemo.remove)
-    }
-
+  // detectors materialize eagerly); [[releaseCaches]] frees the memos
+  // for long-lived sessions.
   private def hsTable(s: SparkSession, dir: String): DataFrame =
-    hsMemo.getOrElseUpdate((s, dir), {
-      hookSession(s)
+    SessionCache.memo(s, dir, "hs") {
       graft.operators.Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
         .persist()
-    })
+    }
   // s06's (vec_id, signature, block) sketch table — computed ONCE and
   // persisted: both sides of the coarse self-join read it (without the
   // memo each branch re-derives every signature), and it is exactly the
@@ -696,8 +700,7 @@ object NorthStar {
     // the conf is part of the cache identity: setting/unsetting
     // annIndexDir mid-session must re-resolve, not serve the stale path
     val idxRoot = s.conf.getOption("spark.graft.annIndexDir")
-    sigMemo.getOrElseUpdate((s, dir + "#" + idxRoot.getOrElse(""), nBits, blocks), {
-      hookSession(s)
+    SessionCache.memo(s, dir, (idxRoot, nBits, blocks)) {
       val base = idxRoot match {
         case Some(root) =>
           // per-corpus path component: two corpora in one session must
@@ -719,7 +722,7 @@ object NorthStar {
       }
       base.withColumn("blk", pmod(col("vec_id"), lit(blocks)).cast("int"))
         .persist()
-    })
+    }
   }
   // r17 optimization: the 0.8 pair set is DERIVED from the persisted
   // 0.6 table (histPairs) instead of running a second full PPJoin.
@@ -732,48 +735,36 @@ object NorthStar {
   // prefix-filter candidate pipeline over the corpus instead of two
   // (guide §1.2/§2.4 — both thresholds are needed in-session: d03/d06/
   // d07/d13/d26 consume 0.8, d20 consumes 0.6); the looser build is the
-  // superset machinery a production session would run once.
+  // superset machinery a production session would run once. The view is
+  // not persisted, so a release drops it and leaves the 0.6 blocks to
+  // the histPairs entry.
   private def neardupPairs(s: SparkSession, dir: String): DataFrame =
-    pairsMemo.getOrElseUpdate((s, dir),
-      histPairs(s, dir).filter(col("jaccard") >= 0.8))
+    SessionCache.memo(s, dir, "pairs")(histPairs(s, dir).filter(col("jaccard") >= 0.8))
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsMemo.getOrElseUpdate((s, dir),
+    SessionCache.memo(s, dir, "lsh")(
       graft.operators.Dedup.minhashLshPairs(hsTable(s, dir), 0.8,
         k = 128, bands = 32, estFloor = 0.6))
+  // d20's threshold-0.6 pair table (strictly larger than the 0.8 set —
+  // must ride the same lifecycle, not stack a fresh persist per call)
   private def histPairs(s: SparkSession, dir: String): DataFrame =
-    histPairsMemo.getOrElseUpdate((s, dir),
+    SessionCache.memo(s, dir, "hist")(
       graft.operators.Dedup.jaccardPairsExact(hsTable(s, dir), 0.6))
 
-  /** Release the memoized dedup-tier caches for (session, dir) — the
-    * lifecycle handle for long-lived sessions (harness runs simply exit).
+  /** Release the session's memoized intermediates for (session, dir) —
+    * the lifecycle handle for long-lived sessions (harness runs simply
+    * exit).
     *
-    * WARNING — the chained [[graft.Checkpoints]] release is
-    * SESSION-scoped, not dir-scoped: tracked checkpoint blocks carry no
-    * corpus identity (they are minted deep inside operators that never
-    * see a path), so releasing corpus A also frees the checkpoints
-    * backing any still-held result built from corpus B in the SAME
-    * session, and re-executing such a result afterwards throws (its
-    * lineage is truncated). Materialize (collect / write) results from
-    * every corpus you care about before releasing ANY corpus, or use
-    * one session per corpus. The per-table memos above are genuinely
-    * dir-scoped; only the checkpoint registry is wider. */
-  def releaseCaches(s: SparkSession, dir: String): Unit = {
-    hsMemo.remove((s, dir)).foreach(_.unpersist())
-    // pairsMemo holds a lazy FILTER VIEW of histPairs since r17 — its
-    // unpersist is a no-op by design (histPairsMemo below owns the
-    // persisted blocks); the remove is what matters (drop the memo so a
-    // rebuilt 0.6 table cannot serve a stale view)
-    pairsMemo.remove((s, dir))
-    lshPairsMemo.remove((s, dir)).foreach(_.unpersist())
-    histPairsMemo.remove((s, dir)).foreach(_.unpersist())
-    sketchMemo.remove((s, dir)).foreach(_.unpersist())
-    // sig keys carry "dir#<annIndexDir>" (conf is part of cache identity)
-    sigMemo.keys.filter(k => k._1 == s && k._2.startsWith(dir + "#"))
-      .foreach(k => sigMemo.remove(k).foreach(_.unpersist()))
-    // the relational surface owns its own memos (coOrderEdges, shared
-    // file indexes) — one lifecycle entry point for callers
-    graft.Queries.releaseCaches(s, dir)
-  }
+    * WARNING — the tracked-checkpoint release is SESSION-scoped, not
+    * dir-scoped: tracked checkpoint blocks carry no corpus identity (they
+    * are minted deep inside operators that never see a path), so
+    * releasing corpus A also frees the checkpoints backing any
+    * still-held result built from corpus B in the SAME session, and
+    * re-executing such a result afterwards throws (its lineage is
+    * truncated). Materialize (collect / write) results from every corpus
+    * you care about before releasing ANY corpus, or use one session per
+    * corpus. The memos are genuinely dir-scoped; only the checkpoints
+    * are wider. */
+  def releaseCaches(s: SparkSession, dir: String): Unit = SessionCache.release(s, dir)
 
   private def jaccardOracle(threshold: Double): String =
     s"""WITH sh AS (
@@ -1054,7 +1045,7 @@ object NorthStar {
     val keeps = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
     graft.pipeline.CorpusPipeline.verdictStages(d, "src0", lmGate, poolComponents,
       (name, _, ids) => {
-        val keep = graft.Checkpoints.tracked(ids)
+        val keep = graft.SessionCache.tracked(ids)
         keeps += name -> keep
         d.join(keep, Seq("doc_id"), "left_semi")
       })
@@ -1386,7 +1377,7 @@ object NorthStar {
       // signature (the sigTable memo's lesson, applied locally)
       val ids = pairs.select(col("doc_a").as("doc_id"))
         .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-      val sig = graft.Checkpoints.tracked(docs(s, dir)
+      val sig = graft.SessionCache.tracked(docs(s, dir)
         .join(ids, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
           Hashing.fnvMinhashSignature(TF.shingles(col("text")), 128).as("sig")))
@@ -1644,40 +1635,16 @@ object NorthStar {
     // bucketing loses recall — so the pair scan stays exact. The speed
     // comes from (a) norms computed once per vector, not per pair, and
     // (b) the codegen'd DotProduct kernel in the pair projection; the
-    // SCALE comes from block partitioning: every unordered vector pair
-    // falls in exactly one unordered block pair {blk(a), blk(b)}, so
-    // replicating each side once per block pair turns the O(n²) scan
-    // into an equi-join on (bi, bj) with B(B+1)/2 keys — an ordinary
-    // shuffled join (replication factor (B+1)/2, parallelism B(B+1)/2,
-    // per-task work (n/B)²), no BroadcastNestedLoopJoin/cartesian
-    // anywhere. The approximate path is s02's bucketed ANN.
+    // SCALE comes from block partitioning (blockPairJoin), with no
+    // BroadcastNestedLoopJoin/cartesian anywhere. The approximate path is
+    // s02's bucketed ANN.
     "e01_embedding_neardup" -> ((s, dir) => {
       val B = 8
       val e = emb(s, dir)
         .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", sqrt(VF.normSq(col("v"))))
         .withColumn("blk", pmod(col("vec_id"), lit(B)).cast("int"))
-      val blockPairs = {
-        import s.implicits._
-        (for (i <- 0 until B; j <- i until B) yield (i, j)).toDF("bi", "bj")
-      }
-      // the scoring exchange keys on (bi, bj) — B(B+1)/2 keys of tiny
-      // BYTES but quadratic-per-block downstream dot products; pin the
-      // partition count so AQE's byte-based coalescing can't serialize
-      // the scoring onto 1-2 tasks (measured: 877 ms on 2 tasks with
-      // 30 cores idle before the pin)
-      val par = s.sparkContext.defaultParallelism
-      val left = e.join(broadcast(blockPairs), col("blk") === col("bi"))
-        .select(col("vec_id").as("id_l"), col("v").as("v_l"),
-          col("nrm").as("nrm_l"), col("bi"), col("bj"))
-        .repartition(par, col("bi"), col("bj"))
-      val right = e.join(broadcast(blockPairs), col("blk") === col("bj"))
-        .select(col("vec_id").as("id_r"), col("v").as("v_r"),
-          col("nrm").as("nrm_r"), col("bi").as("ri"), col("bj").as("rj"))
-        .repartition(par, col("ri"), col("rj"))
-      left.join(right, col("bi") === col("ri") && col("bj") === col("rj"))
-        // diagonal blocks would otherwise emit both orientations
-        .filter(col("bi") =!= col("bj") || col("id_l") < col("id_r"))
+      blockPairJoin(s, e, B, Seq("v", "nrm"))
         .select(
           least(col("id_l"), col("id_r")).as("id_a"),
           greatest(col("id_l"), col("id_r")).as("id_b"),
@@ -3207,26 +3174,7 @@ object NorthStar {
         .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", sqrt(VF.normSq(col("v"))))
         .withColumn("blk", pmod(col("vec_id"), lit(B)).cast("int"))
-      val blockPairs = {
-        import s.implicits._
-        (for (i <- 0 until B; j <- i until B) yield (i, j)).toDF("bi", "bj")
-      }
-      // the scoring exchange keys on (bi, bj) — B(B+1)/2 keys of tiny
-      // BYTES but quadratic-per-block downstream dot products; pin the
-      // partition count so AQE's byte-based coalescing can't serialize
-      // the scoring onto 1-2 tasks (measured: 877 ms on 2 tasks with
-      // 30 cores idle before the pin)
-      val par = s.sparkContext.defaultParallelism
-      val left = e.join(broadcast(blockPairs), col("blk") === col("bi"))
-        .select(col("vec_id").as("id_l"), col("v").as("v_l"),
-          col("nrm").as("nrm_l"), col("bi"), col("bj"))
-        .repartition(par, col("bi"), col("bj"))
-      val right = e.join(broadcast(blockPairs), col("blk") === col("bj"))
-        .select(col("vec_id").as("id_r"), col("v").as("v_r"),
-          col("nrm").as("nrm_r"), col("bi").as("ri"), col("bj").as("rj"))
-        .repartition(par, col("ri"), col("rj"))
-      val scored = left.join(right, col("bi") === col("ri") && col("bj") === col("rj"))
-        .filter(col("bi") =!= col("bj") || col("id_l") < col("id_r"))
+      val scored = blockPairJoin(s, e, B, Seq("v", "nrm"))
         .select(col("id_l"), col("id_r"),
           (VF.dot(col("v_l"), col("v_r")) / (col("nrm_l") * col("nrm_r"))).as("score"))
       // both orientations from the SAME pass: a union of two selects would
@@ -3271,27 +3219,7 @@ object NorthStar {
       val e = emb(s, dir)
         .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      val sig = sigTable(s, dir, nBits, B)
-      val blockPairs = {
-        import s.implicits._
-        (for (i <- 0 until B; j <- i until B) yield (i, j)).toDF("bi", "bj")
-      }
-      // pin the (bi, bj) scoring exchange like s04/e01: signature rows
-      // are tiny BYTES but the block join emits the quadratic-per-block
-      // hamming pairs — AQE's byte-based coalescing ran it on ONE task
-      // (measured 1.0 s with 31 cores idle)
-      val par = s.sparkContext.defaultParallelism
-      val left = sig.join(broadcast(blockPairs), col("blk") === col("bi"))
-        .select(col("vec_id").as("id_l"), col("sig").as("sig_l"),
-          col("bi"), col("bj"))
-        .repartition(par, col("bi"), col("bj"))
-      val right = sig.join(broadcast(blockPairs), col("blk") === col("bj"))
-        .select(col("vec_id").as("id_r"), col("sig").as("sig_r"),
-          col("bi").as("ri"), col("bj").as("rj"))
-        .repartition(par, col("ri"), col("rj"))
-      val hams = left
-        .join(right, col("bi") === col("ri") && col("bj") === col("rj"))
-        .filter(col("bi") =!= col("bj") || col("id_l") < col("id_r"))
+      val hams = blockPairJoin(s, sigTable(s, dir, nBits, B), B, Seq("sig"))
         .select(col("id_l"), col("id_r"),
           VF.hammingSig(col("sig_l"), col("sig_r")).as("ham"))
       // both orientations from the same pass (see s04)
@@ -3568,7 +3496,7 @@ object NorthStar {
       // localCheckpoint materializes the batch assignment ONCE so the
       // self-join's two branches don't each redo the range-partition
       // sort — the in-session stand-in for writing the batched table
-      val batched = graft.Checkpoints.tracked(
+      val batched = graft.SessionCache.tracked(
         pos.select(expr(s"(pos - 1) div $B").as("batch_id"),
           col("vec_id"), col("label"), col("v")))
       val a = batched.select(col("batch_id"), col("vec_id").as("anchor_id"),
@@ -4050,8 +3978,7 @@ object NorthStar {
       // the sketch table is memoized+persisted per (session, dir): it feeds
       // BOTH sides of the pair join (one aggregation, not two) and repeated
       // invocations must not stack fresh persists (releaseCaches frees it)
-      val sk = sketchMemo.getOrElseUpdate((s, dir), {
-        hookSession(s)
+      val sk = SessionCache.memo(s, dir, "sketch") {
         val t = docs(s, dir)
           .select(col("source"),
             Hashing.fnvMinhashSignature(TF.tokens(col("text")), 128).as("doc_sig"))
@@ -4060,7 +3987,7 @@ object NorthStar {
           .persist()
         t.count() // materialize the handful of per-source sketches once
         t
-      })
+      }
       sk.as("a").join(broadcast(sk.as("b")), col("a.source") < col("b.source"))
         .select(col("a.source").as("src_a"), col("b.source").as("src_b"),
           Hashing.minhashEstJaccard(col("a.sig"), col("b.sig")).as("est_jaccard"))

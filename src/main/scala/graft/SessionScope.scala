@@ -4,9 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /**
- * One-shot per-session cleanup hooks for graft's session-keyed
- * registries ([[Checkpoints]], the [[Queries]] table/edge memos, the
- * dedup-tier memos in [[NorthStar]]).
+ * One-shot per-session cleanup hook for graft's one session-keyed
+ * registry, [[SessionCache]] (its memos and tracked checkpoints).
  *
  * Why a listener and not a sweep: the registries used to call a
  * `sweepStopped()` map walk on every lookup, which (a) put a

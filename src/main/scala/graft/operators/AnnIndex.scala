@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => VF}
+import graft.model.Schemas
 
 /**
  * Persistent ANN sketch-index artifact — the on-disk form of the
@@ -60,24 +61,23 @@ object AnnIndex {
       .exists(new org.apache.hadoop.fs.Path(path))
 
   /** Bulk-build the artifact from an embeddings table (overwrites).
-    * Refuses an empty input: a zero-row partitioned write leaves a
-    * schemaless directory that makes every later load throw
-    * UNABLE_TO_INFER_SCHEMA while exists() reports true — the wedged
-    * state the streaming gate also guards against. */
+    * Refuses an empty input before the overwrite, so an existing
+    * artifact survives: a zero-row partitioned write leaves a schemaless
+    * directory while exists() reports true. The signature rows are a
+    * per-row projection of `emb`, so `emb`'s emptiness is theirs. */
   def build(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
             path: String, nBits: Int = 512): Unit = {
-    val rows = sigRows(emb, idCol, vecCol, dim, nBits, batchId = -1L).persist()
-    try {
-      require(rows.limit(1).count() > 0,
-        s"refusing to build an EMPTY index at $path (a schemaless " +
-          "partitioned dir would wedge every later load)")
-      rows.write.mode("overwrite").partitionBy("_batch_id").parquet(path)
-    } finally rows.unpersist()
+    require(!emb.isEmpty,
+      s"refusing to build an EMPTY index at $path (a schemaless " +
+        "partitioned dir would wedge every later load)")
+    sigRows(emb, idCol, vecCol, dim, nBits, batchId = -1L)
+      .write.mode("overwrite").partitionBy("_batch_id").parquet(path)
   }
 
-  /** Load the artifact (all provenance partitions — bulk + gate rows). */
+  /** Load the artifact (all provenance partitions — bulk + gate rows)
+    * under its declared layout, with no footer-inference job. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Schemas.batchPartitioned(Schemas.vectorStore)).parquet(path)
 
   /**
    * Incremental refresh: append signature rows for ids present in `emb`

@@ -241,7 +241,7 @@ object Dedup {
     // partitioning, so all three consumers still plan exchange-free on
     // this side; 20-byte rows make the materialization cheap at any
     // corpus size relative to the duplicate shuffle it removes.
-    val sh = graft.Checkpoints.tracked(
+    val sh = graft.SessionCache.tracked(
       hsTable.select(col("doc_id"), size(col("hs")).as("n"),
           explode(col("hs")).as("s"))
         .repartition(par, col("s")))
@@ -370,7 +370,7 @@ object Dedup {
     // two-leg union materialization ran the caller's (often expensive)
     // candidate-pair derivation once PER LEG — see Graph.bothDirections
     val edges = Graph.bothDirections(pairs, "doc_a", "doc_b").persist()
-    var labels = graft.Checkpoints.tracked(
+    var labels = graft.SessionCache.tracked(
       edges.select(col("src").as("id")).distinct()
         .withColumn("component", col("id")))
     def checksum(df: DataFrame): java.math.BigDecimal =
@@ -391,20 +391,20 @@ object Dedup {
       // FINAL round's blocks (which the returned result reads) are
       // released at releaseCaches — superseded rounds are freed below
       // as soon as the successor materializes
-      val propagated = graft.Checkpoints.tracked(labels.union(viaNeighbor)
+      val propagated = graft.SessionCache.tracked(labels.union(viaNeighbor)
         .groupBy(col("id")).agg(min(col("component")).as("component")))
       // 2. shortcut: component := label(component) — the pointer-doubling
       // step that makes the round count logarithmic in the diameter
       val mapping = propagated.select(col("id").as("cid"), col("component").as("cc"))
       val prev = labels
-      labels = graft.Checkpoints.tracked(propagated
+      labels = graft.SessionCache.tracked(propagated
         .join(mapping, col("component") === col("cid"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("cc"), col("component"))).as("component")))
       // the new labels checkpoint is eager — the previous round's
       // labels and this round's propagated are no longer read by anyone
-      graft.Checkpoints.free(prev)
-      graft.Checkpoints.free(propagated)
+      graft.SessionCache.free(prev)
+      graft.SessionCache.free(propagated)
       val cur = checksum(labels)
       converged = cur.compareTo(last) == 0
       last = cur
@@ -610,7 +610,7 @@ object Dedup {
     // branch. The RESULT reads these blocks lazily, so they ride the
     // tracked-checkpoint lifecycle (released by releaseCaches) rather
     // than leaking per invocation
-    val ph = graft.Checkpoints.tracked(hashes
+    val ph = graft.SessionCache.tracked(hashes
       .select(col(idCol).as("_id"), col(hashCol).as("_h"))
       .filter(col("_h").isNotNull))
     val hv = ph.select(col("_h")).distinct()

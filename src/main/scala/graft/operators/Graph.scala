@@ -81,9 +81,9 @@ object Graph {
         concat(lit("triangleStats: vertex id out of [0, 2^32): "),
           id.cast("string"))).cast("long"), lit(0L))
     }
-    val e = graft.Checkpoints.tracked(
+    val e = graft.SessionCache.tracked(
       edges.select(checkedId(col("u")).as("u"), checkedId(col("v")).as("v")))
-    val deg = graft.Checkpoints.tracked(
+    val deg = graft.SessionCache.tracked(
       e.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy(col("x")).agg(count(lit(1)).as("d")))
     val keyed = e
@@ -95,7 +95,7 @@ object Graph {
     // src = (degree, id)-smaller endpoint; kdst carries the order key of
     // the other end so the wedge join can pair out-edges without a
     // second degree lookup
-    val oriented = graft.Checkpoints.tracked(keyed.select(
+    val oriented = graft.SessionCache.tracked(keyed.select(
       when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
       when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
       greatest(col("ku"), col("kv")).as("kdst")))
@@ -215,7 +215,7 @@ object Graph {
    * shape that re-reads a 100 TB fact table dozens of times). Three
    * bounded materializations replace all of it; the result reads them
    * lazily, so they ride the tracked-checkpoint lifecycle
-   * ([[graft.Checkpoints]], released with the session's other caches)
+   * ([[graft.SessionCache]], released with the session's other caches)
    * instead of leaking per invocation.
    */
   def linkPredict(edges: DataFrame): DataFrame = {
@@ -225,9 +225,9 @@ object Graph {
         concat(lit("linkPredict: vertex id out of [0, 2^32): "),
           id.cast("string"))).cast("long"), lit(0L))
     }
-    val e = graft.Checkpoints.tracked(
+    val e = graft.SessionCache.tracked(
       edges.select(checkedId(col("u")).as("u"), checkedId(col("v")).as("v")))
-    val deg = graft.Checkpoints.tracked(
+    val deg = graft.SessionCache.tracked(
       e.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy(col("x")).agg(count(lit(1)).as("d")))
     val keyed = e
@@ -236,7 +236,7 @@ object Graph {
       .select(col("u"), col("v"),
         (shiftleft(col("du"), 32) + col("u")).as("ku"),
         (shiftleft(col("dv"), 32) + col("v")).as("kv"))
-    val oriented = graft.Checkpoints.tracked(keyed.select(
+    val oriented = graft.SessionCache.tracked(keyed.select(
       when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
       when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
       greatest(col("ku"), col("kv")).as("kdst")))
@@ -330,9 +330,9 @@ object Graph {
     // both-direction exploded view: one row per (endpoint, neighbor);
     // degree(x) = row count at src = x. Checkpointed once, scanned
     // map-side by every wave's decrement probe.
-    val ex = graft.Checkpoints.tracked(
+    val ex = graft.SessionCache.tracked(
       bothDirections(edges.select(col("u"), col("v")), "u", "v"))
-    var base = graft.Checkpoints.tracked(          // last checkpointed state
+    var base = graft.SessionCache.tracked(          // last checkpointed state
       ex.groupBy(col("src")).agg(count(lit(1)).as("d")))
     var cur = base                                 // current (maybe lazy) state
     var it = 0
@@ -342,7 +342,7 @@ object Graph {
     // still references them, so they are freed only when the next degree
     // checkpoint supersedes that chain (or at return)
     var waveCkpts = List.empty[DataFrame]
-    def freeWaves(): Unit = { waveCkpts.foreach(graft.Checkpoints.free); waveCkpts = Nil }
+    def freeWaves(): Unit = { waveCkpts.foreach(graft.SessionCache.free); waveCkpts = Nil }
     while (!converged && it < maxIter) {
       val wave0 = cur.filter(col("d") < k).select(col("src"))
       // on a lazy `cur` (sinceCkpt > 0) the emptiness action plus the
@@ -350,9 +350,9 @@ object Graph {
       // the last degree checkpoint — materialize the tiny victim table
       // once and let all three read it (default batch size 1 always has
       // a checkpointed `cur`, so this adds zero jobs there)
-      val wave = if (sinceCkpt > 0) graft.Checkpoints.tracked(wave0) else wave0
+      val wave = if (sinceCkpt > 0) graft.SessionCache.tracked(wave0) else wave0
       if (wave.isEmpty) {
-        if (sinceCkpt > 0) graft.Checkpoints.free(wave) // nothing references it
+        if (sinceCkpt > 0) graft.SessionCache.free(wave) // nothing references it
         converged = true
       } else {
         if (sinceCkpt > 0) waveCkpts ::= wave
@@ -366,8 +366,8 @@ object Graph {
           .filter(col("d") > 0) // isolated survivors leave the live subgraph
         it += 1; sinceCkpt += 1
         if (sinceCkpt >= peelsPerCheckpoint) {
-          val ck = graft.Checkpoints.tracked(cur) // eager — base superseded
-          graft.Checkpoints.free(base)
+          val ck = graft.SessionCache.tracked(cur) // eager — base superseded
+          graft.SessionCache.free(base)
           freeWaves()
           base = ck; cur = ck; sinceCkpt = 0
         }
@@ -385,19 +385,19 @@ object Graph {
       // leaked blocks (base + edge view + any in-batch waves)
       val left = cur.agg(sum(col("d"))).head.getLong(0) / 2
       freeWaves()
-      graft.Checkpoints.free(base)
-      graft.Checkpoints.free(ex)
+      graft.SessionCache.free(base)
+      graft.SessionCache.free(ex)
       throw new IllegalArgumentException(
         s"requirement failed: kCore: no fixpoint after $maxIter rounds ($left edges left)")
     }
     val res =
       if (sinceCkpt > 0) {
-        val ck = graft.Checkpoints.tracked(cur)
-        graft.Checkpoints.free(base)
+        val ck = graft.SessionCache.tracked(cur)
+        graft.SessionCache.free(base)
         freeWaves()
         ck
       } else cur
-    graft.Checkpoints.free(ex) // result reads only the degree checkpoint
+    graft.SessionCache.free(ex) // result reads only the degree checkpoint
     res.select(col("src").as("vertex"), col("d").as("core_degree"))
   }
 
@@ -485,8 +485,8 @@ object Graph {
     val e = edges.select(col("u"), col("v"))
     // one-Generate orientation: checkpoint materialization previously
     // ran the caller's edge derivation once per union leg
-    val orient = graft.Checkpoints.tracked(bothDirections(e, "u", "v"))
-    var labels = graft.Checkpoints.tracked(
+    val orient = graft.SessionCache.tracked(bothDirections(e, "u", "v"))
+    var labels = graft.SessionCache.tracked(
       orient.select(col("src").as("vertex")).distinct()
         .select(col("vertex"), col("vertex").as("lab")))
     for (_ <- 1 to rounds) {
@@ -496,16 +496,16 @@ object Graph {
       // argmax by (count DESC, label ASC) as one aggregate: lexicographic
       // max of (c, -lab) — valid because labels are non-negative
       val prev = labels
-      labels = graft.Checkpoints.tracked(votes
+      labels = graft.SessionCache.tracked(votes
         .groupBy(col("src"))
         .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
         .select(col("src").as("vertex"), (-col("m.nl")).as("lab")))
       // the new round materialized — the previous label table is dead
-      graft.Checkpoints.free(prev)
+      graft.SessionCache.free(prev)
     }
     // the RESULT references only the final labels; the oriented edge
     // table served its last join in the loop above
-    graft.Checkpoints.free(orient)
+    graft.SessionCache.free(orient)
     labels
       .join(labels.groupBy(col("lab")).agg(count(lit(1)).as("community_size")),
         Seq("lab"))
@@ -565,8 +565,8 @@ object Graph {
                            scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 100L, s"scale must be >= 100 for the 85/15 split, got $scale")
-    val both = graft.Checkpoints.tracked(edges.select(col("src"), col("dst")))
-    val outdeg = graft.Checkpoints.tracked(
+    val both = graft.SessionCache.tracked(edges.select(col("src"), col("dst")))
+    val outdeg = graft.SessionCache.tracked(
       both.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     // every source node appears in outdeg, so the node set is its key
     // set — a free projection on the checkpointed aggregate, not a
@@ -597,12 +597,12 @@ object Graph {
         .groupBy(col("node"))
         .agg((expr("(85 * sum(c)) div 100") + sum(col("r"))).as("rank"))
       if (i % 4 == 0 && i < iters) {
-        active = graft.Checkpoints.tracked(active)
+        active = graft.SessionCache.tracked(active)
         // the new segment boundary is materialized — the previous
         // boundary's blocks (which this segment's lazy rounds read)
         // are superseded; the final boundary stays tracked because the
         // returned (lazy) tail rounds still read it
-        if (lastCp != null) graft.Checkpoints.free(lastCp)
+        if (lastCp != null) graft.SessionCache.free(lastCp)
         lastCp = active
       }
     }

@@ -423,8 +423,7 @@ object StreamingIngest {
 
   /** The admitted corpus: (doc_id, text[scrubbed], fp, _batch_id). */
   def scrubbedCorpus(spark: SparkSession, storePath: String): DataFrame =
-    spark.read.parquet(storePath)
-      .select(col("doc_id"), col("text"), col("fp"), col("_batch_id"))
+    spark.read.schema(Schemas.batchPartitioned(Schemas.scrubbedStore)).parquet(storePath)
 
   /** Latest event per doc_id (highest _batch_id wins; docs are unique
     * within a batch by construction), removals filtered — the current
@@ -440,12 +439,11 @@ object StreamingIngest {
 
   /** The corpus as of the last drained batch: (doc_id, digest). */
   def snapshotState(spark: SparkSession, storePath: String): DataFrame =
-    stateAsOf(spark.read.parquet(storePath))
+    stateAsOf(snapshotEvents(spark, storePath))
 
   /** All change events in batch order: (doc_id, digest, status, _batch_id). */
   def snapshotEvents(spark: SparkSession, storePath: String): DataFrame =
-    spark.read.parquet(storePath)
-      .select(col("doc_id"), col("digest"), col("status"), col("_batch_id"))
+    spark.read.schema(Schemas.batchPartitioned(Schemas.snapshotEventStore)).parquet(storePath)
 
   /**
    * Streaming incremental materialized-view maintenance — the streaming
@@ -640,7 +638,8 @@ object StreamingIngest {
   }
 
   /** The maintained view behind [[startDistinctMaintenance]]: merged
-    * register maxima → a04's harmonic estimate per key. */
+    * register maxima → a04's harmonic estimate per key. The read infers
+    * its schema: the key column is a parameter, so no layout is declared. */
   def distinctView(spark: SparkSession, storePath: String,
                    keyCol: String = "event_type"): DataFrame =
     graft.Queries.hllEstimate(
@@ -850,7 +849,8 @@ object StreamingIngest {
 
   /** The maintained aggregate view over [[startAggMaintenance]]'s partial
     * store: ⊕-merge (sum of counts, sum of exact DECIMAL partials) —
-    * bit-identical to a full recompute over every event ever ingested. */
+    * bit-identical to a full recompute over every event ever ingested.
+    * The read infers its schema: the key column is a parameter. */
   def aggView(spark: SparkSession, storePath: String,
               keyCol: String = "user_id"): DataFrame =
     spark.read.parquet(storePath)

@@ -34,6 +34,21 @@ class AnnIndexSpec extends AnyFunSuite {
       && live.exceptAll(loaded).count() == 0)
   }
 
+  test("an empty build over an existing artifact throws and leaves the " +
+       "artifact loading the same rows") {
+    val root = Files.createTempDirectory("graft_annidx_empty").toString
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    AnnIndex.build(emb, "vec_id", "embedding", dim = 64, path = s"$root/idx")
+    def rows = AnnIndex.load(spark, s"$root/idx")
+      .select(col("vec_id"), col("sig"), col("_batch_id"))
+      .as[(Long, Seq[Long], Long)].collect().toSet
+    val before = rows
+    assert(before.size == emb.count())
+    intercept[IllegalArgumentException](AnnIndex.build(emb.filter(lit(false)),
+      "vec_id", "embedding", dim = 64, path = s"$root/idx"))
+    assert(rows == before, "a refused build must leave the artifact untouched")
+  }
+
   test("s07 probes a PRE-WRITTEN index: same result, plan reads the " +
        "artifact, no in-session signature build") {
     val root = Files.createTempDirectory("graft_annidx_s07").toString

@@ -1731,4 +1731,34 @@ class StreamingSpec extends AnyFunSuite {
     // would add a footer job
     assert(jobs.get == 11, s"saw ${jobs.get} jobs")
   }
+
+  test("the public store views read their declared layouts: building one " +
+       "submits no footer-inference job, and _batch_id is a LongType") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.types.LongType
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_view_jobs").toString
+    val scrubbed = s"$root/scrubbed"; val events = s"$root/events"
+    def df(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    StreamingIngest.scrubbedIngestBatch(df(1L -> "alpha beta"), scrubbed, 0L)
+    StreamingIngest.snapshotDiffBatch(df(1L -> "alpha"), events, 0L)
+    val sc = spark.sparkContext
+    for ((name, view) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "scrubbedCorpus" -> (() => StreamingIngest.scrubbedCorpus(spark, scrubbed)),
+        "snapshotEvents" -> (() => StreamingIngest.snapshotEvents(spark, events)),
+        "snapshotState" -> (() => StreamingIngest.snapshotState(spark, events)))) {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      GraftBridge.drainListeners(sc)
+      sc.addSparkListener(listener)
+      val v = try { val v = view(); GraftBridge.drainListeners(sc); v }
+        finally sc.removeSparkListener(listener)
+      assert(jobs.get == 0, s"$name: building the view submitted ${jobs.get} jobs")
+      if (name != "snapshotState")
+        assert(v.schema("_batch_id").dataType == LongType, s"$name: ${v.schema}")
+    }
+  }
 }
