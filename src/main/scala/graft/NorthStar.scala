@@ -678,9 +678,9 @@ object NorthStar {
   //    pipeline would keep;
   //  - the exact pair set feeds THREE queries (d03 emits it, d06
   //    clusters it, d07 picks representatives).
-  // Dedup's internal caches are released inside Dedup itself (its pair
-  // detectors materialize eagerly); [[releaseCaches]] frees the memos
-  // for long-lived sessions.
+  // Dedup's pair detectors return plain plans that hold no cache, so
+  // each memo that is read more than once persists its frame in its own
+  // build, and [[releaseCaches]] unpersists it: one owner per table.
   private def hsTable(s: SparkSession, dir: String): DataFrame =
     SessionCache.memo(s, dir, "hs") {
       graft.operators.Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
@@ -740,15 +740,15 @@ object NorthStar {
   // the histPairs entry.
   private def neardupPairs(s: SparkSession, dir: String): DataFrame =
     SessionCache.memo(s, dir, "pairs")(histPairs(s, dir).filter(col("jaccard") >= 0.8))
-  private def lshPairs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
     SessionCache.memo(s, dir, "lsh")(
       graft.operators.Dedup.minhashLshPairs(hsTable(s, dir), 0.8,
-        k = 128, bands = 32, estFloor = 0.6))
+        k = 128, bands = 32, estFloor = 0.6).persist())
   // d20's threshold-0.6 pair table (strictly larger than the 0.8 set —
   // must ride the same lifecycle, not stack a fresh persist per call)
-  private def histPairs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def histPairs(s: SparkSession, dir: String): DataFrame =
     SessionCache.memo(s, dir, "hist")(
-      graft.operators.Dedup.jaccardPairsExact(hsTable(s, dir), 0.6))
+      graft.operators.Dedup.jaccardPairsExact(hsTable(s, dir), 0.6).persist())
 
   /** Release the session's memoized intermediates for (session, dir) —
     * the lifecycle handle for long-lived sessions (harness runs simply

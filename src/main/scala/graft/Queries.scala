@@ -102,13 +102,6 @@ object Queries {
         .persist()
     }
 
-  /** Edge-orientation shared shape: see
-    * [[graft.operators.Graph.bothDirections]] (one Generate, no
-    * two-leg union — the union legs re-run the pair build per leg). */
-  private[graft] def bothDirections(pairs: DataFrame,
-                                    a: String, b: String): DataFrame =
-    graft.operators.Graph.bothDirections(pairs, a, b)
-
   /**
    * The supplier↔part bipartite incidence graph (distinct lineitem
    * (l_suppkey, l_partkey + 10^7) pairs) — the SECOND shared g-tier
@@ -612,16 +605,17 @@ object Queries {
     }),
 
     // runtime bloom-prefilter join: the dimension (a selective customer
-    // subset, merge-hinted so it genuinely doesn't broadcast) is reduced
-    // to a bloom filter; the fact side drops non-candidate rows BEFORE
-    // its shuffle. Result identical to the plain join — the bloom only
-    // moves work ahead of the exchange (see Relational.bloomPrefilterJoin)
+    // subset, which the operator's join merge-hints so it genuinely
+    // doesn't broadcast) is reduced to a bloom filter; the fact side
+    // drops non-candidate rows BEFORE its shuffle. Result identical to
+    // the plain join — the bloom only moves work ahead of the exchange
+    // (see Relational.bloomPrefilterJoin)
     "j02_bloom_join" -> ((s, dir) => {
       val dim = t(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").as("o_custkey"), col("c_name"))
       Relational.bloomPrefilterJoin(
-          t(s, dir, "orders"), dim.hint("merge"), "o_custkey",
+          t(s, dir, "orders"), dim, "o_custkey",
           expectedItems = 1L << 16, fpp = 0.01)
         .select(col("o_orderkey"), col("o_custkey"), col("c_name"))
     }),
@@ -904,7 +898,7 @@ object Queries {
       val scale = 1000000000000L
       // shared memoized bipartite edge table (see supplierPartEdges):
       // one distinct build serves g02/g04/g12 instead of one per query
-      val both = bothDirections(supplierPartEdges(s, dir), "s", "p")
+      val both = graft.operators.Graph.bothDirections(supplierPartEdges(s, dir), "s", "p")
       val outdeg = both.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val nodes = both.select(col("src").as("node")).distinct()
       var ranks = nodes.select(col("node"), lit(scale).as("rank"))
@@ -950,7 +944,7 @@ object Queries {
       // one scan per evaluation, not a two-leg union of two scans —
       // this edge list is LAZY (re-evaluated by each BFS round), so the
       // union shape paid 2 lineitem scans × 4 rounds
-      val both = bothDirections(edges, "src", "dst")
+      val both = graft.operators.Graph.bothDirections(edges, "src", "dst")
       var dist = s.range(1)
         .select(lit(start).as("node"), lit(0).as("hops"))
       var frontier = dist.select(col("node"))
@@ -1097,7 +1091,7 @@ object Queries {
     // unchanged.
     "g12_ppr" -> ((s, dir) => {
       // shared memoized bipartite edge table (see supplierPartEdges)
-      val both = bothDirections(supplierPartEdges(s, dir), "s", "p")
+      val both = graft.operators.Graph.bothDirections(supplierPartEdges(s, dir), "s", "p")
       val seeds = t(s, dir, "supplier")
         .filter(col("s_nationkey") === 0)
         .select(col("s_suppkey").as("node"))
@@ -1107,13 +1101,6 @@ object Queries {
 
     "g08_kcore" -> ((s, dir) => {
       val edges = coOrderEdges(s, dir, minQty = 30)
-      // peelsPerCheckpoint RE-MEASURED r18 (verdict item: "re-measure
-      // wave batching on this host"): batch=4 ran 70 stages / ~3.2 s
-      // wall vs the default's 41 / ~1.7 s on the same harness peel —
-      // with a lazy in-batch chain every wave must materialize its own
-      // victim table (an extra job per wave) and the emptiness check
-      // still replays the chain, so batching ADDS stages here instead
-      // of removing them. Default 1 (checkpoint every wave) stays.
       graft.operators.Graph.kCore(edges, k = 12)
     }),
 

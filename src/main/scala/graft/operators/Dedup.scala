@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{Hashing, TextFunctions => TF}
 
@@ -29,11 +30,13 @@ import graft.functions.{Hashing, TextFunctions => TF}
  * inter/(na+nb−inter) over the distinct shingle sets (integer sizes, one
  * double division) — identical arithmetic to a SQL oracle.
  *
- * Cache lifecycle: the two pair detectors materialize their result
- * eagerly (the result IS the pair table — always consumed in full),
- * persist it, and release every internal cache before returning, so a
- * long-lived session holds exactly the pair table and whatever the
- * caller chooses to keep.
+ * Cache lifecycle: the pair detectors ([[jaccardPairsExact]],
+ * [[minhashLshPairs]], [[minhashLshPairsAgainst]]) return plain plans —
+ * building one runs no Spark job and persists nothing. The caller owns
+ * the pair table: one that reads it more than once persists it itself
+ * (NorthStar's session memos do, and release it with the session), a
+ * one-shot reader leaves it lazy. [[connectedComponents]] persists its
+ * input only when the caller has not, and unpersists only that.
  */
 object Dedup {
 
@@ -80,7 +83,6 @@ object Dedup {
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))))
       .filter(col("rn") <= col("n") - ceil(col("n") * threshold - 1e-6) + 1)
       .select(col("doc_id"), col("s"), col("rn"), col("n"))
-      .persist() // feeds BOTH sides of the self-join below
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id") &&
         // length filter (epsilon loosens only — never drops a true pair)
@@ -97,20 +99,7 @@ object Dedup {
       .filter(col("ub") >=
         ceil((col("na") + col("nb")) * (threshold / (1.0 + threshold)) - 1e-6))
       .select(col("doc_a"), col("doc_b"))
-    val out = exactVerify(cand, hsTable, threshold).persist()
-    out.count() // materialize now, so the internal caches can be released
-    prefix.unpersist()
-    out
-  }
-
-  /** Convenience form from raw documents: builds (and afterwards releases)
-    * its own shingle-hash table. */
-  def jaccardPairsExact(docs: DataFrame, idCol: String, textCol: String,
-                        threshold: Double, n: Int = 3): DataFrame = {
-    val hs = shingleHashTable(docs, idCol, textCol, n).persist()
-    val out = jaccardPairsExact(hs, threshold)
-    hs.unpersist()
-    out
+    exactVerify(cand, hsTable, threshold)
   }
 
   /**
@@ -124,7 +113,6 @@ object Dedup {
                       bands: Int, estFloor: Double): DataFrame = {
     val sig = hsTable
       .select(col("doc_id"), TF.minhashFromHashes(col("hs"), k).as("sig"))
-      .persist()
     val banded = sig.select(col("doc_id"),
       posexplode(TF.lshBandHashes(col("sig"), k, bands)).as(Seq("band", "bh")))
     val cand = banded.as("a").join(banded.as("b"),
@@ -142,20 +130,7 @@ object Dedup {
       .filter(Hashing.sigMatchCount(col("sig_a"), col("sig_b"))
         .cast(DoubleType) / k >= estFloor)
       .select(col("doc_a"), col("doc_b"))
-    val out = exactVerify(survivors, hsTable, threshold).persist()
-    out.count()
-    sig.unpersist()
-    out
-  }
-
-  /** Convenience form from raw documents — see [[jaccardPairsExact]]. */
-  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, n: Int = 3, k: Int = 128,
-                      bands: Int = 32, estFloor: Double = 0.6): DataFrame = {
-    val hs = shingleHashTable(docs, idCol, textCol, n).persist()
-    val out = minhashLshPairs(hs, threshold, k, bands, estFloor)
-    hs.unpersist()
-    out
+    exactVerify(survivors, hsTable, threshold)
   }
 
   /**
@@ -177,12 +152,12 @@ object Dedup {
       .select(col("doc_id"), col("hs"), TF.minhashFromHashes(col("hs"), k).as("sig"))
     def banded(sig: DataFrame) = sig.select(col("doc_id"),
       posexplode(TF.lshBandHashes(col("sig"), k, bands)).as(Seq("band", "bh")))
-    val sn = sigs(hsNew).persist(); val si = sigs(hsIndex).persist()
+    val sn = sigs(hsNew); val si = sigs(hsIndex)
     val cand = banded(sn).as("a").join(banded(si).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_existing"))
       .distinct()
-    val out = cand
+    cand
       // count-pinned for the same reason as the batch estimate stage
       .repartition(cand.sparkSession.sparkContext.defaultParallelism, col("doc_new"))
       .join(sn.select(col("doc_id").as("doc_new"), col("hs").as("hs_n"),
@@ -197,10 +172,6 @@ object Dedup {
             Hashing.sortedIntersectCount(col("hs_n"), col("hs_e"))))
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .persist()
-    out.count()
-    sn.unpersist(); si.unpersist()
-    out
   }
 
   /**
@@ -316,13 +287,18 @@ object Dedup {
    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           localEdgeThreshold: Long = 4000000L): DataFrame = {
-    val p = pairs.persist() // read twice: the size dispatch + the solve
+    // read twice (the size dispatch + the solve): cache it unless the
+    // caller already does — a caller's cache (a session memo) is not ours
+    // to drop, and persisting an already-cached plan is a no-op whose
+    // unpersist would uncache the caller's copy
+    val own = pairs.storageLevel == StorageLevel.NONE
+    val p = if (own) pairs.persist() else pairs
     val out =
       if (p.count() <= localEdgeThreshold) connectedComponentsLocal(p)
       else connectedComponentsDistributed(p, maxIter)
     // both solve paths are eager (collect / checkpointed fixpoint loop),
     // so the input cache can be released before returning
-    p.unpersist()
+    if (own) p.unpersist()
     out
   }
 

@@ -35,6 +35,44 @@ object Graph {
       .select(col("e.src"), col("e.dst"))
 
   /**
+   * The degree-ordered orientation [[triangleStats]] and [[linkPredict]]
+   * share, as three tracked checkpoints: the id-checked edge table
+   * `(u, v)`, its degree table `(x, d)`, and `oriented(src, dst, kdst)`
+   * with src the (degree, id)-smaller endpoint and kdst the packed order
+   * key of the other end, so a wedge join can pair out-edges without a
+   * second degree lookup. `op` names the caller in the out-of-range id
+   * error.
+   */
+  private def degreeOriented(edges: DataFrame,
+                             op: String): (DataFrame, DataFrame, DataFrame) = {
+    // assert_true yields NULL when the condition holds and raises
+    // otherwise; adding its long-cast keeps the check inside the same
+    // whole-stage-codegen'd projection with zero extra passes.
+    def checkedId(c: Column): Column = {
+      val id = c.cast("long")
+      id + coalesce(assert_true(id >= 0L && id < (1L << 32),
+        concat(lit(s"$op: vertex id out of [0, 2^32): "),
+          id.cast("string"))).cast("long"), lit(0L))
+    }
+    val e = graft.SessionCache.tracked(
+      edges.select(checkedId(col("u")).as("u"), checkedId(col("v")).as("v")))
+    val deg = graft.SessionCache.tracked(
+      e.select(explode(array(col("u"), col("v"))).as("x"))
+        .groupBy(col("x")).agg(count(lit(1)).as("d")))
+    val keyed = e
+      .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
+      .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
+      .select(col("u"), col("v"),
+        (shiftleft(col("du"), 32) + col("u")).as("ku"),
+        (shiftleft(col("dv"), 32) + col("v")).as("kv"))
+    val oriented = graft.SessionCache.tracked(keyed.select(
+      when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
+      when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
+      greatest(col("ku"), col("kv")).as("kdst")))
+    (e, deg, oriented)
+  }
+
+  /**
    * Exact triangle count, wedge (open-triad) count, and the global
    * clustering coefficient 3·triangles/wedges, over an undirected simple
    * edge set `edges(u, v)` with u < v, no self-loops, no duplicates.
@@ -72,33 +110,7 @@ object Graph {
    * this work over the same materializations.
    */
   def triangleStats(edges: DataFrame): DataFrame = {
-    // assert_true yields NULL when the condition holds and raises
-    // otherwise; adding its long-cast keeps the check inside the same
-    // whole-stage-codegen'd projection with zero extra passes.
-    def checkedId(c: Column): Column = {
-      val id = c.cast("long")
-      id + coalesce(assert_true(id >= 0L && id < (1L << 32),
-        concat(lit("triangleStats: vertex id out of [0, 2^32): "),
-          id.cast("string"))).cast("long"), lit(0L))
-    }
-    val e = graft.SessionCache.tracked(
-      edges.select(checkedId(col("u")).as("u"), checkedId(col("v")).as("v")))
-    val deg = graft.SessionCache.tracked(
-      e.select(explode(array(col("u"), col("v"))).as("x"))
-        .groupBy(col("x")).agg(count(lit(1)).as("d")))
-    val keyed = e
-      .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
-      .select(col("u"), col("v"),
-        (shiftleft(col("du"), 32) + col("u")).as("ku"),
-        (shiftleft(col("dv"), 32) + col("v")).as("kv"))
-    // src = (degree, id)-smaller endpoint; kdst carries the order key of
-    // the other end so the wedge join can pair out-edges without a
-    // second degree lookup
-    val oriented = graft.SessionCache.tracked(keyed.select(
-      when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
-      when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
-      greatest(col("ku"), col("kv")).as("kdst")))
+    val (_, deg, oriented) = degreeOriented(edges, "triangleStats")
     // wedge (a, b) at minimal vertex src, a before b in the total order;
     // the closing edge — if present — is oriented a -> b by transitivity
     val wedges = oriented.as("e1").join(oriented.as("e2"),
@@ -219,27 +231,7 @@ object Graph {
    * instead of leaking per invocation.
    */
   def linkPredict(edges: DataFrame): DataFrame = {
-    def checkedId(c: Column): Column = {
-      val id = c.cast("long")
-      id + coalesce(assert_true(id >= 0L && id < (1L << 32),
-        concat(lit("linkPredict: vertex id out of [0, 2^32): "),
-          id.cast("string"))).cast("long"), lit(0L))
-    }
-    val e = graft.SessionCache.tracked(
-      edges.select(checkedId(col("u")).as("u"), checkedId(col("v")).as("v")))
-    val deg = graft.SessionCache.tracked(
-      e.select(explode(array(col("u"), col("v"))).as("x"))
-        .groupBy(col("x")).agg(count(lit(1)).as("d")))
-    val keyed = e
-      .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
-      .select(col("u"), col("v"),
-        (shiftleft(col("du"), 32) + col("u")).as("ku"),
-        (shiftleft(col("dv"), 32) + col("v")).as("kv"))
-    val oriented = graft.SessionCache.tracked(keyed.select(
-      when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
-      when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
-      greatest(col("ku"), col("kv")).as("kdst")))
+    val (e, deg, oriented) = degreeOriented(edges, "linkPredict")
     // wedge (wu, wv) centered at w; the left-semi keeps the wedge row —
     // and with it the center — exactly when the closing edge exists
     val tri = oriented.as("e1").join(oriented.as("e2"),
@@ -298,20 +290,10 @@ object Graph {
    * frames are runtime-small and AQE/statistics pick broadcast on
    * their own.
    *
-   * `peelsPerCheckpoint` bounds the LINEAGE of the degree state: waves
-   * between eager localCheckpoints of the (tiny) degree table. The
-   * default 1 re-materializes every wave — the state is a few
-   * thousand (vertex, degree) rows, so the write is noise while the
-   * bounded lineage keeps each wave's plan flat; raise it only if the
-   * per-wave checkpoint job overhead ever dominates (degenerate
-   * many-wave peels over tiny graphs). With a batch size > 1 the wave
-   * itself is materialized once per round (the emptiness check is an
-   * action, and the dec/anti joins re-derive the wave — unmaterialized,
-   * each of the three would replay the whole lazy chain since the last
-   * degree checkpoint); the residual cost of batching is that each
-   * round's ONE replay still walks the in-batch chain (O(batch²) tiny
-   * degree-table links per batch), which is exactly what the batch
-   * trades against per-wave checkpoint job overhead.
+   * Every wave re-materializes the (tiny) degree table as an eager
+   * localCheckpoint — the state is a few thousand (vertex, degree) rows,
+   * so the write is noise while the bounded lineage keeps each wave's
+   * plan flat.
    * Convergence = an empty wave;
    * a peel that exhausts `maxIter` PRODUCTIVE waves gets one final
    * degree check instead of paying an extra wave to prove the
@@ -322,55 +304,32 @@ object Graph {
    * count), so the returned plan references only the last tiny
    * checkpoint — the edge view is freed before returning.
    */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 16,
-            peelsPerCheckpoint: Int = 1): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 16): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(peelsPerCheckpoint >= 1,
-      s"peelsPerCheckpoint must be >= 1, got $peelsPerCheckpoint")
     // both-direction exploded view: one row per (endpoint, neighbor);
     // degree(x) = row count at src = x. Checkpointed once, scanned
     // map-side by every wave's decrement probe.
     val ex = graft.SessionCache.tracked(
       bothDirections(edges.select(col("u"), col("v")), "u", "v"))
-    var base = graft.SessionCache.tracked(          // last checkpointed state
+    var cur = graft.SessionCache.tracked( // checkpointed degree state
       ex.groupBy(col("src")).agg(count(lit(1)).as("d")))
-    var cur = base                                 // current (maybe lazy) state
     var it = 0
-    var sinceCkpt = 0
     var converged = false
-    // waves materialized inside the current batch: the lazy `cur` chain
-    // still references them, so they are freed only when the next degree
-    // checkpoint supersedes that chain (or at return)
-    var waveCkpts = List.empty[DataFrame]
-    def freeWaves(): Unit = { waveCkpts.foreach(graft.SessionCache.free); waveCkpts = Nil }
     while (!converged && it < maxIter) {
-      val wave0 = cur.filter(col("d") < k).select(col("src"))
-      // on a lazy `cur` (sinceCkpt > 0) the emptiness action plus the
-      // dec/anti joins would each replay the unmaterialized chain since
-      // the last degree checkpoint — materialize the tiny victim table
-      // once and let all three read it (default batch size 1 always has
-      // a checkpointed `cur`, so this adds zero jobs there)
-      val wave = if (sinceCkpt > 0) graft.SessionCache.tracked(wave0) else wave0
-      if (wave.isEmpty) {
-        if (sinceCkpt > 0) graft.SessionCache.free(wave) // nothing references it
-        converged = true
-      } else {
-        if (sinceCkpt > 0) waveCkpts ::= wave
+      val wave = cur.filter(col("d") < k).select(col("src"))
+      if (wave.isEmpty) converged = true
+      else {
         // one live edge lost per exploded row whose neighbor is waved
         val dec = ex.join(wave.select(col("src").as("dst")), Seq("dst"), "left_semi")
           .groupBy(col("src")).agg(count(lit(1)).as("dec"))
-        cur = cur.join(wave, Seq("src"), "left_anti")
+        val next = graft.SessionCache.tracked(cur.join(wave, Seq("src"), "left_anti")
           .join(dec, Seq("src"), "left")
           .select(col("src"),
             (col("d") - coalesce(col("dec"), lit(0L))).as("d"))
-          .filter(col("d") > 0) // isolated survivors leave the live subgraph
-        it += 1; sinceCkpt += 1
-        if (sinceCkpt >= peelsPerCheckpoint) {
-          val ck = graft.SessionCache.tracked(cur) // eager — base superseded
-          graft.SessionCache.free(base)
-          freeWaves()
-          base = ck; cur = ck; sinceCkpt = 0
-        }
+          .filter(col("d") > 0)) // isolated survivors leave the live subgraph
+        graft.SessionCache.free(cur) // eager successor — cur superseded
+        cur = next
+        it += 1
       }
     }
     if (!converged) {
@@ -382,23 +341,15 @@ object Graph {
     if (!converged) {
       // free the working checkpoints BEFORE raising: a caller that
       // catches and retries with a larger maxIter must not accumulate
-      // leaked blocks (base + edge view + any in-batch waves)
+      // leaked blocks (degree state + edge view)
       val left = cur.agg(sum(col("d"))).head.getLong(0) / 2
-      freeWaves()
-      graft.SessionCache.free(base)
+      graft.SessionCache.free(cur)
       graft.SessionCache.free(ex)
       throw new IllegalArgumentException(
         s"requirement failed: kCore: no fixpoint after $maxIter rounds ($left edges left)")
     }
-    val res =
-      if (sinceCkpt > 0) {
-        val ck = graft.SessionCache.tracked(cur)
-        graft.SessionCache.free(base)
-        freeWaves()
-        ck
-      } else cur
     graft.SessionCache.free(ex) // result reads only the degree checkpoint
-    res.select(col("src").as("vertex"), col("d").as("core_degree"))
+    cur.select(col("src").as("vertex"), col("d").as("core_degree"))
   }
 
   /**

@@ -260,7 +260,10 @@ object Relational {
    * collected to the driver and re-planted as a literal — the same
    * driver round-trip a runtime-filter scalar subquery makes; its size
    * is `numBits/8`, a function of the CALLER'S `expectedItems`/`fpp`
-   * budget, never of the data.
+   * budget, never of the data. The join itself is merge-hinted (the
+   * shuffle join this pattern exists for); the bloom aggregate reads the
+   * un-hinted dimension, since a hint outside a join relation is
+   * dropped with a warning.
    */
   def bloomPrefilterJoin(fact: DataFrame, dim: DataFrame, key: String,
                          expectedItems: Long = 1L << 20,
@@ -276,15 +279,16 @@ object Relational {
         XxHash64(Seq(GraftBridge.expression(col(key))), 42L),
         Literal(expectedItems), Literal(numBits), 0, 0).toAggregateExpression()).as("bf"))
       .head()
+    val leg = dim.hint("merge")
     if (bfRow.isNullAt(0)) {
       // empty dimension: the aggregate yields null — the join is empty
       // anyway, so skip the prefilter rather than probe a null sketch
-      fact.join(dim, Seq(key), "inner")
+      fact.join(leg, Seq(key), "inner")
     } else {
       val pre = fact.filter(GraftBridge.column(BloomFilterMightContain(
         Literal(bfRow.getAs[Array[Byte]](0), BinaryType),
         XxHash64(Seq(GraftBridge.expression(col(key))), 42L))))
-      pre.join(dim, Seq(key), "inner")
+      pre.join(leg, Seq(key), "inner")
     }
   }
 

@@ -214,20 +214,20 @@ object CorpusPipeline {
         scrubbed0.filter(TF.mojibakeClean(col("text"))))
 
     // 1-4. the verdict chain over the scrubbed text; the near-dup stage
-    // builds its pairs fresh over its pool (exact or LSH). Both pair
-    // stages return a persisted frame and the components are eager
-    // (collected or checkpointed), so neither cache is read again.
+    // builds its pairs fresh over its pool (exact or LSH). The pair plan
+    // is lazy and read once, by connectedComponents (which caches its own
+    // input); the shingle-hash table it reads on several branches is
+    // this stage's one cache, released once the components exist (they
+    // are eager: collected or checkpointed).
     def nearDupComponents(pool: DataFrame): DataFrame = {
       val hs = Dedup.shingleHashTable(pool, "doc_id", "text", 3).persist()
-      val pairs =
-        if (lshPairs) Dedup.minhashLshPairs(hs, jaccard, k = 128, bands = 32,
-          estFloor = jaccard - 0.2)
-        else Dedup.jaccardPairsExact(hs, jaccard)
-      val comps = Dedup.connectedComponents(
-        pairs.select(col("doc_a"), col("doc_b")))
-      pairs.unpersist()
-      hs.unpersist()
-      comps
+      try {
+        val pairs =
+          if (lshPairs) Dedup.minhashLshPairs(hs, jaccard, k = 128, bands = 32,
+            estFloor = jaccard - 0.2)
+          else Dedup.jaccardPairsExact(hs, jaccard)
+        Dedup.connectedComponents(pairs.select(col("doc_a"), col("doc_b")))
+      } finally hs.unpersist()
     }
     val clean = verdictStages(scrubbed, evalSource, lmFluency,
       nearDupComponents, stage _).last._2

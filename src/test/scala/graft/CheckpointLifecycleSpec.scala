@@ -152,4 +152,28 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     assert(view.storageLevel != StorageLevel.NONE, "release unpersisted the filter view")
     read.unpersist(); view.unpersist()
   }
+
+  test("the pair memos own their caches: histPairs and lshPairs build persisted, " +
+       "release unpersists them") {
+    import org.apache.spark.storage.StorageLevel
+    val dir = "/root/testdata/sf0.001"
+    NorthStar.releaseCaches(spark, dir)
+    val memos = Seq("hist" -> NorthStar.histPairs(spark, dir),
+      "lsh" -> NorthStar.lshPairs(spark, dir))
+    for ((name, pairs) <- memos)
+      assert(pairs.storageLevel != StorageLevel.NONE, s"$name: the memo build did not persist")
+    NorthStar.releaseCaches(spark, dir)
+    for ((name, pairs) <- memos)
+      assert(pairs.storageLevel == StorageLevel.NONE, s"$name: release left it cached")
+  }
+
+  test("a memo survives connectedComponents: g09 leaves the co-order memo cached") {
+    import org.apache.spark.storage.StorageLevel
+    val dir = "/root/testdata/sf0.001"
+    NorthStar.releaseCaches(spark, dir)
+    SparkEntry.queries("g09_components")(spark, dir).count()
+    assert(Queries.coOrderEdges(spark, dir, 46).storageLevel != StorageLevel.NONE,
+      "g09 uncached the co-order memo it reads; g11 would rebuild it")
+    NorthStar.releaseCaches(spark, dir)
+  }
 }

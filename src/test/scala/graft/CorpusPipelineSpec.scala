@@ -49,14 +49,11 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .withColumn("doc_id", col("doc_id") + 1000000L))
     val scrubbed = input.withColumn("text", TF.scrubPii(col("text")))
     // reference components: exact Jaccard pairs built here over the pool
-    def exactComponents(pool: org.apache.spark.sql.DataFrame) = {
-      val pairs = graft.operators.Dedup.jaccardPairsExact(
-        pool.select(col("doc_id"), col("text")), "doc_id", "text", 0.8)
-      val comps = graft.operators.Dedup.connectedComponents(
-        pairs.select(col("doc_a"), col("doc_b")))
-      pairs.unpersist()
-      comps
-    }
+    def exactComponents(pool: org.apache.spark.sql.DataFrame) =
+      graft.operators.Dedup.connectedComponents(
+        graft.operators.Dedup.jaccardPairsExact(
+          graft.operators.Dedup.shingleHashTable(pool, "doc_id", "text", 3), 0.8)
+          .select(col("doc_a"), col("doc_b")))
     for (lm <- Seq(false, true)) {
       val chain = CorpusPipeline.verdictStages(scrubbed, "src0", lm,
         exactComponents, (_, pool) => pool)
@@ -90,7 +87,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   test("no surviving pair exceeds the near-dup threshold") {
     val pairs = graft.operators.Dedup.jaccardPairsExact(
-      result.corpus.select(col("doc_id"), col("text")), "doc_id", "text", 0.8)
+      graft.operators.Dedup.shingleHashTable(result.corpus, "doc_id", "text", 3), 0.8)
     assert(pairs.count() == 0)
   }
 

@@ -1461,22 +1461,6 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
-  test("kCore: peelsPerCheckpoint > 1 (lazy in-batch state, materialized " +
-       "waves) matches the per-wave-checkpoint default") {
-    // the maxIter hand graph peels in 4 productive waves — with a batch
-    // of 3 the loop crosses checkpointed AND lazy `cur` states, an
-    // empty-wave convergence check on a lazy state, and the final
-    // tail-checkpoint path; results must be identical to the default
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
-      (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L)).toDF("u", "v")
-    for (batch <- Seq(2, 3, 8)) {
-      val got = graft.operators.Graph
-        .kCore(edges, 2, peelsPerCheckpoint = batch)
-        .as[(Long, Long)].collect().toMap
-      assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L), s"batch=$batch")
-    }
-  }
-
   test("law: kCore equals brute-force iterative peeling on random graphs") {
     val rnd = new scala.util.Random(23)
     for (trial <- 1 to 5) {

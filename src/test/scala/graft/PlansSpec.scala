@@ -168,7 +168,7 @@ class PlansSpec extends AnyFunSuite {
     import spark.implicits._
     val pairs = Seq((1L, 10L), (2L, 10L), (1L, 20L), (1L, 10L))
       .toDF("a", "b").distinct()
-    val oriented = Queries.bothDirections(pairs, "a", "b")
+    val oriented = graft.operators.Graph.bothDirections(pairs, "a", "b")
     val plan = oriented.queryExecution.executedPlan.toString
     assert(plan.contains("Generate"), s"explode orientation missing:\n$plan")
     assert(!plan.contains("Union"),

@@ -341,7 +341,7 @@ class RelationalSpec extends AnyFunSuite {
     (1 to 500).map(i => (i.toLong % 100, i.toLong)).toDF("k", "v").write.parquet(dir)
     val fact = spark.read.parquet(dir)
     val dim = (0 to 9).map(i => (i.toLong, s"d$i")).toDF("k", "name")
-    val got = Relational.bloomPrefilterJoin(fact, dim.hint("merge"), "k")
+    val got = Relational.bloomPrefilterJoin(fact, dim, "k")
     val plain = fact.join(dim, Seq("k"), "inner")
     assert(got.orderBy(col("v")).collect().toSeq ==
       plain.orderBy(col("v")).collect().toSeq)

@@ -82,7 +82,8 @@ class SimilaritySpec extends AnyFunSuite {
     check(Prop.forAll(genWithT) { case (corpus, t) =>
       val docs = corpus.map { case (i, tks) => (i, tks.mkString(" ")) }
         .toDF("doc_id", "text")
-      val got = Dedup.jaccardPairsExact(docs, "doc_id", "text", t)
+      val got = Dedup.jaccardPairsExact(
+          Dedup.shingleHashTable(docs, "doc_id", "text", 3), t)
         .as[(Long, Long, Double)].collect().toSet
       got == brutePairs(corpus, t)
     }, n = 9)
@@ -107,7 +108,8 @@ class SimilaritySpec extends AnyFunSuite {
     check(Prop.forAll(corpusGen) { corpus =>
       val docs = corpus.map { case (i, tks) => (i, tks.mkString(" ")) }
         .toDF("doc_id", "text")
-      val got = Dedup.jaccardPairsExact(docs, "doc_id", "text", 0.8)
+      val got = Dedup.jaccardPairsExact(
+          Dedup.shingleHashTable(docs, "doc_id", "text", 3), 0.8)
         .as[(Long, Long, Double)].collect().toSet
       got == brutePairs(corpus, 0.8)
     }, n = 8)
@@ -148,10 +150,39 @@ class SimilaritySpec extends AnyFunSuite {
     check(Prop.forAll(corpusGen) { corpus =>
       val docs = corpus.map { case (i, tks) => (i, tks.mkString(" ")) }
         .toDF("doc_id", "text")
-      val got = Dedup.minhashLshPairs(docs, "doc_id", "text", 0.8)
+      val got = Dedup.minhashLshPairs(
+          Dedup.shingleHashTable(docs, "doc_id", "text", 3), 0.8,
+          k = 128, bands = 32, estFloor = 0.6)
         .as[(Long, Long, Double)].collect().toSet
       got == brutePairs(corpus, 0.8)
     }, n = 5)
+  }
+
+  test("the pair engines build plain plans: no stage and no cache until the caller's action") {
+    // docs 0/1 and 2/3 are exact twins: odd ids probe the even-id index
+    val docs = Seq((0L, "a b c d e f g h"), (1L, "a b c d e f g h"),
+      (2L, "p q r s t u v w"), (3L, "p q r s t u v w"), (4L, "x y z x y z"))
+      .toDF("doc_id", "text")
+    val hs = Dedup.shingleHashTable(docs, "doc_id", "text", 3).persist()
+    val sc = spark.sparkContext
+    try {
+      assert(hs.count() == 5) // materialized: the builds below may not touch it
+      val odd = hs.filter(col("doc_id") % 2 === 1)
+      val even = hs.filter(col("doc_id") % 2 === 0)
+      val engines = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "jaccardPairsExact" -> (() => Dedup.jaccardPairsExact(hs, 0.8)),
+        "minhashLshPairs" -> (() => Dedup.minhashLshPairs(hs, 0.8,
+          k = 128, bands = 32, estFloor = 0.6)),
+        "minhashLshPairsAgainst" -> (() => Dedup.minhashLshPairsAgainst(odd, even,
+          0.8, k = 128, bands = 32, estFloor = 0.6)))
+      for ((name, build) <- engines) {
+        val before = sc.getPersistentRDDs.keySet
+        val (pairs, m) = Meter(spark).measure(name)(build())
+        assert(m.stages.isEmpty, s"$name ran ${m.stages.size} stages while being built")
+        assert(sc.getPersistentRDDs.keySet == before, s"$name persisted a table")
+        assert(pairs.count() == 2, s"$name: the plan must still find both twin pairs")
+      }
+    } finally hs.unpersist()
   }
 
   test("e01 block-partitioned all-pairs == naive pair scan, with no cartesian/BNLJ") {
