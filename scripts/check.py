@@ -2,7 +2,9 @@
 """Local replica of the driver's correctness gate: for each query result
 parquet written by graft.Verify, run the matching oracle SQL in DuckDB over
 the same sf dir and compare (rows, schema-by-name, exact values after
-sorting columns by name and rows by all columns).
+sorting columns by name and rows by all columns). Without query names,
+every oracle key must have a result directory; a missing one is MISSING
+and counts as BAD.
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir> [query ...]
 """
@@ -84,6 +86,12 @@ for qdir in sorted(glob.glob(os.path.join(outdir, "*"))):
         else:
             entry["status"] = "ok"
     results[q] = entry
+
+# a full check covers every oracle: a query without a result directory
+# (graft.Verify deletes the directory of a query that throws) is BAD
+if not only:
+    for q in sorted(set(oracles) - set(results) - skip):
+        results[q] = {"status": "MISSING", "spark_rows": None}
 
 bad = {q: e for q, e in results.items() if e.get("status") not in ("ok", "no_oracle")}
 for q, e in sorted(results.items()):

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalogue.SearchQueries
+
 /**
  * Scale dry-run: synthetic corpora R× the size of a source scale factor
  * with the SAME statistics — documents drawn from the source corpus's
@@ -274,9 +276,9 @@ object ScaleDryRun {
       AnnJoin.bucketedKnnJoin(emb10, sig10, "vec_id", "embedding",
         dim, nCells10, probes, cands = 96, k = 3).count())
     val (aRows, aT, aSb) = metered("s06 head-to-head")(
-      SparkEntry.queries("s06_ann_knn_join")(spark, dir10).count())
+      SearchQueries.s06.build(spark, dir10).count())
     val (eRows, eT, eSb) = metered("s04 head-to-head")(
-      SparkEntry.queries("s04_knn_join")(spark, dir10).count())
+      SearchQueries.s04.build(spark, dir10).count())
     println()
     println(s"head-to-head at n=$n10 (clustered):")
     println("| approach | rows | wall s | shuffle write |")
@@ -287,7 +289,7 @@ object ScaleDryRun {
     // persist both result sets: intersect + counts would otherwise
     // re-execute the quadratic exact join (the study's costliest stage)
     // twice more for no output change
-    val exact = SparkEntry.queries("s04_knn_join")(spark, dir10)
+    val exact = SearchQueries.s04.build(spark, dir10)
       .select(col("vec_id"), col("neighbor_id")).persist()
     val bucketed = AnnJoin.bucketedKnnJoin(emb10, sig10, "vec_id", "embedding",
       dim, nCells10, probes, cands = 96, k = 3)

@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.catalogue.Query
+
 /**
- * Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+ * Driver contract — see SURVEY.md §7.
  *
  * `queries` carries one entry per implemented operator from SURVEY.md §2
  * (instantiated on the harness tables) plus the north-star LLM-pipeline
- * operators; `oracleSql` has the DuckDB-equivalent SQL for every entry
- * that is SQL-expressible. Implementations live in [[Queries]] /
- * [[NorthStar]].
+ * operators; `oracleSql` has the DuckDB-equivalent SQL of every entry.
+ * Both are projections of one [[catalogue]]: the [[graft.catalogue.Query]]
+ * records, one file per tier under [[graft.catalogue]], each query's
+ * build beside its oracle. The builds share the helpers in [[NorthStar]],
+ * the oracles those in [[graft.oracle.OracleSql]].
  */
 object SparkEntry {
 
@@ -37,9 +41,19 @@ object SparkEntry {
       .select(Schemas.finalWeatherCsvOrder.map(col): _*)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 + north star. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** Every harness query, tier by tier. */
+  val catalogue: Seq[Query] = {
+    import graft.catalogue._
+    RelationalQueries.all ++ AggregateQueries.all ++ GraphQueries.all ++
+      DedupQueries.all ++ TextQueries.all ++ SearchQueries.all ++
+      MediaQueries.all
+  }
 
-  /** DuckDB-equivalent SQL per query (omitted → rows-only check). */
-  def oracleSql: Map[String, String] = Queries.oracles
+  /** One entry per implemented operator from SURVEY.md §2 + north star. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalogue.map(q => q.name -> q.build).toMap
+
+  /** DuckDB-equivalent SQL per query. */
+  val oracleSql: Map[String, String] =
+    catalogue.map(q => q.name -> q.oracle).toMap
 }

@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws leaves no result directory (so a stale one cannot pass the
+  * compare), and the last line names the queries that failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -18,13 +20,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      .toSeq.flatMap { case (name, fn) =>
+      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // a result left by an earlier run must not pass for this one
+        val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -53,5 +59,7 @@ object Verify {
     try Files.writeString(Paths.get(s"$outDir/run_meta.json"),
       s"""{"ts":"${java.time.Instant.now()}","host":"$host","sf_dir":${q(sfDir)},"spark":"${spark.version}","n_queries":${SparkEntry.queries.size}}""")
     finally spark.stop()
+    println(s"[verify] failed queries (${failed.size}): " +
+      (if (failed.isEmpty) "none" else failed.sorted.mkString(" ")))
   }
 }

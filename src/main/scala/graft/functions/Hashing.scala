@@ -414,7 +414,7 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
  * golden-ratio seed for j) — two multiply-xorshift rounds. Every step is
  * mod-2^64 integer arithmetic (multiply, xor, unsigned shift), so an
  * external SQL engine replays it bit-exactly in HUGEINT residues
- * (see NorthStar.mixSql), unlike XXH64 whose byte-block framing makes a
+ * (see OracleSql.mixSql), unlike XXH64 whose byte-block framing makes a
  * SQL twin impractical. Mins are over SIGNED longs, matching the SQL
  * twin's signed-residue conversion before MIN.
  */

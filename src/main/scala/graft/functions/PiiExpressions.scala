@@ -127,7 +127,7 @@ object Luhn {
   /** Check-digit test over a candidate with '-'/' ' separators: from
     * the right, every second digit doubled (−9 when > 9), sum ≡ 0
     * mod 10. Pure integer arithmetic — the DuckDB twin
-    * (NorthStar.luhnCondSql) replays it digit-for-digit. */
+    * (OracleSql.luhnCondSql) replays it digit-for-digit. */
   def valid(s: UTF8String): Boolean = {
     val bytes = s.getBytes
     var sum = 0
@@ -245,7 +245,7 @@ case class GuardedScrub(child: Expression, label: String,
  * consuming-regex candidate scan, whose leftmost-first consumption
  * could let a space-separated digit neighbor steal a spaced PAN's head
  * (the round-15 law-pinned under-count). Semantics, replayed
- * digit-for-digit by the DuckDB twin (NorthStar.cardValuesSql):
+ * digit-for-digit by the DuckDB twin (OracleSql.cardValuesSql):
  *
  *  1. MAXIMAL digit-group runs: digit groups joined by single dash or
  *     space separators (a separator not followed by a digit ends the
@@ -394,7 +394,7 @@ case class CardMatches(child: Expression) extends UnaryExpression {
  * cross-engine; the comparator is on chars, exact for these ASCII
  * values). Regex alone cannot express the checksum gate, so this is
  * fold semantics, not two-pass-replace semantics; the DuckDB twin is
- * NorthStar.pseudoSql over cardValuesSql with a constant tag. Literal
+ * OracleSql.pseudoSql over cardValuesSql with a constant tag. Literal
  * folding is position-blind by contract: a verified value occurring
  * inside a longer unguarded run is rewritten there too (the
  * conservative side for redaction).
@@ -444,7 +444,7 @@ case class CardScrub(child: Expression, tag: String) extends UnaryExpression {
  * the CardRuns machinery): the CONTIGUOUS electronic format
  * (`GB82WEST12345698765432`) and the SPACED 4-group paper format
  * (`GB82 WEST 1234 5698 7654 32`). Semantics, replayed by the DuckDB
- * twin (NorthStar.ibanValuesSql):
+ * twin (OracleSql.ibanValuesSql):
  *
  *  1. GROUPS are maximal `[A-Z0-9]+` spans (lowercase ends a group —
  *     IBANs are uppercase by standard; lowercase admission would make

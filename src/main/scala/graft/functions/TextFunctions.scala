@@ -296,7 +296,7 @@ object TextFunctions {
     * leftmost-valid selection (invalid candidates never block; when two
     * VALID candidates overlap, the leftmost wins — pinned arbitration).
     * Exact under any adjacency, replayed by the DuckDB twin
-    * (NorthStar.cardValuesSql). This pattern string remains the CARD
+    * (OracleSql.cardValuesSql). This pattern string remains the CARD
     * class's raw-survivor SWEEP shape (a text where it finds nothing
     * contains no card-shaped span at all). */
   private val cardCore =
@@ -308,7 +308,7 @@ object TextFunctions {
   /** Luhn check over a candidate PAN (separators stripped): from the
     * right, every second digit doubled (minus 9 when > 9), sum ≡ 0
     * mod 10. Exact integer arithmetic over built-in HOFs, replayed
-    * digit-for-digit by the DuckDB twin (NorthStar.luhnCondSql). This
+    * digit-for-digit by the DuckDB twin (OracleSql.luhnCondSql). This
     * Column form is the REFERENCE formulation the equivalence law
     * checks against — the hot paths run [[CardRuns]]' primitive integer
     * fold instead (HOFs are CodegenFallbacks whose interpreted trees
@@ -351,7 +351,7 @@ object TextFunctions {
   /** ISO 13616 mod-97 over a candidate IBAN: first four chars moved to
     * the end, A–Z mapped to 10–35, the big decimal ≡ 1 mod 97 —
     * incremental remainder fold, exact integer arithmetic replayed by
-    * the DuckDB twin (NorthStar.mod97CondSql). Like [[luhnValid]], this
+    * the DuckDB twin (OracleSql.mod97CondSql). Like [[luhnValid]], this
     * Column form is the REFERENCE formulation for the equivalence laws;
     * hot paths run IbanScan's primitive fold. */
   def mod97Valid(m: Column): Column = {
@@ -563,7 +563,7 @@ object TextFunctions {
       // equal-length values CAN overlap at a shifted occurrence (suffix
       // of one = prefix of the other), the literal replace is
       // position-blind, so replace order changes the folded text — the
-      // DuckDB twin (NorthStar.pseudoSql) realizes the identical
+      // DuckDB twin (OracleSql.pseudoSql) realizes the identical
       // length-DESC / value-ASC order. No class's pattern can match
       // inside a tag (tag bodies are digits/hex with no '@', '.', '-',
       // or '::'), so an earlier replacement can never feed a later one.

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+
+import graft.catalogue._
 
 /**
  * SQL surface for the multi-stage ANN cascades (round-6 item 5): the
@@ -29,35 +30,17 @@ import org.apache.spark.sql.functions._
  */
 object GraftViews {
 
-  /**
-   * Register the ANN cascade views over a harness-layout corpus `dir`.
-   * `nCells`/`probes` parameterize only the bucketed view (scale
-   * nCells ~ corpus/64 as it grows; see operators/AnnJoin).
-   */
-  def registerAnn(spark: SparkSession, dir: String,
-                  nCells: Int = 16, probes: Int = 2): Unit = {
-    graft.SparkEntry.queries("s06_ann_knn_join")(spark, dir)
+  /** Register the ANN cascade views over a harness-layout corpus `dir`;
+    * the bucketed view is the s10 entry (16 cells, 2 probes). */
+  def registerAnn(spark: SparkSession, dir: String): Unit = {
+    SearchQueries.s06.build(spark, dir)
       .createOrReplaceTempView("graft_ann_knn")
-    graft.SparkEntry.queries("s07_ann_incremental")(spark, dir)
+    SearchQueries.s07.build(spark, dir)
       .createOrReplaceTempView("graft_ann_incremental")
-    graft.SparkEntry.queries("s11_ann_retrieval")(spark, dir)
+    SearchQueries.s11.build(spark, dir)
       .createOrReplaceTempView("graft_ann_retrieval")
-    // at default parameters the bucketed view IS the s10 harness entry —
-    // route through it so a cascade retune cannot silently diverge the
-    // view from the entry; the inline build exists only for non-default
-    // cell geometry
-    val bucketed =
-      if (nCells == 16 && probes == 2)
-        graft.SparkEntry.queries("s10_ann_bucketed")(spark, dir)
-      else {
-        val sig = graft.NorthStar.sigTable(spark, dir, 512, 8)
-          .select(col("vec_id"), col("sig"))
-        graft.operators.AnnJoin.bucketedKnnJoin(
-          spark.read.parquet(s"$dir/embeddings.parquet"), sig,
-          "vec_id", "embedding", dim = 64, nCells = nCells, probes = probes,
-          cands = 96, k = 3)
-      }
-    bucketed.createOrReplaceTempView("graft_ann_knn_bucketed")
+    SearchQueries.s10.build(spark, dir)
+      .createOrReplaceTempView("graft_ann_knn_bucketed")
   }
 
   /**
@@ -74,17 +57,17 @@ object GraftViews {
    * | `graft_corpus_release`    | verdict × model gate (d16)           | (doc_id, score) |
    */
   def registerPipeline(spark: SparkSession, dir: String): Unit = {
-    graft.SparkEntry.queries("s14_faceted_topk")(spark, dir)
+    SearchQueries.s14.build(spark, dir)
       .createOrReplaceTempView("graft_faceted_topk")
-    graft.SparkEntry.queries("d16_corpus_release")(spark, dir)
+    DedupQueries.d16.build(spark, dir)
       .createOrReplaceTempView("graft_corpus_release")
-    graft.SparkEntry.queries("s12_inbatch_negatives")(spark, dir)
+    SearchQueries.s12.build(spark, dir)
       .createOrReplaceTempView("graft_inbatch_negatives")
-    graft.SparkEntry.queries("s13_matryoshka_topk")(spark, dir)
+    SearchQueries.s13.build(spark, dir)
       .createOrReplaceTempView("graft_matryoshka_topk")
-    graft.SparkEntry.queries("t27_quality_classifier")(spark, dir)
+    TextQueries.t27.build(spark, dir)
       .createOrReplaceTempView("graft_quality_scores")
-    graft.SparkEntry.queries("q60_corpus_diff")(spark, dir)
+    RelationalQueries.q60.build(spark, dir)
       .createOrReplaceTempView("graft_corpus_diff")
   }
 
@@ -111,35 +94,35 @@ object GraftViews {
    * | `graft_conversions`    | clean V→P sequences (q65)           | (user_id, event_id, view_ts, purchase_ts, secs_to_convert) |
    */
   def registerCuration(spark: SparkSession, dir: String): Unit = {
-    graft.SparkEntry.queries("d17_bloom_gate")(spark, dir)
+    DedupQueries.d17.build(spark, dir)
       .createOrReplaceTempView("graft_ingest_gate")
-    graft.SparkEntry.queries("s15_maxsim_rerank")(spark, dir)
+    SearchQueries.s15.build(spark, dir)
       .createOrReplaceTempView("graft_maxsim_topk")
-    graft.SparkEntry.queries("m07_keyframes")(spark, dir)
+    MediaQueries.m07.build(spark, dir)
       .createOrReplaceTempView("graft_keyframes")
-    graft.SparkEntry.queries("m08_audio_segments")(spark, dir)
+    MediaQueries.m08.build(spark, dir)
       .createOrReplaceTempView("graft_audio_segments")
-    graft.SparkEntry.queries("m09_image_neardup")(spark, dir)
+    MediaQueries.m09.build(spark, dir)
       .createOrReplaceTempView("graft_image_neardup")
-    graft.SparkEntry.queries("t30_vocab_growth")(spark, dir)
+    TextQueries.t30.build(spark, dir)
       .createOrReplaceTempView("graft_vocab_growth")
-    graft.SparkEntry.queries("e14_diverse_sample")(spark, dir)
+    SearchQueries.e14.build(spark, dir)
       .createOrReplaceTempView("graft_diverse_sample")
-    graft.SparkEntry.queries("g07_link_predict")(spark, dir)
+    GraphQueries.g07.build(spark, dir)
       .createOrReplaceTempView("graft_link_features")
-    graft.SparkEntry.queries("s16_retrieval_eval")(spark, dir)
+    SearchQueries.s16.build(spark, dir)
       .createOrReplaceTempView("graft_retrieval_eval")
-    graft.SparkEntry.queries("e15_quant_error")(spark, dir)
+    SearchQueries.e15.build(spark, dir)
       .createOrReplaceTempView("graft_quant_report")
-    graft.SparkEntry.queries("m10_video_neardup")(spark, dir)
+    MediaQueries.m10.build(spark, dir)
       .createOrReplaceTempView("graft_video_neardup")
-    graft.SparkEntry.queries("d18_normalized_dedup")(spark, dir)
+    DedupQueries.d18.build(spark, dir)
       .createOrReplaceTempView("graft_norm_leak_audit")
-    graft.SparkEntry.queries("m11_media_manifest")(spark, dir)
+    MediaQueries.m11.build(spark, dir)
       .createOrReplaceTempView("graft_media_manifest")
-    graft.SparkEntry.queries("a08_decayed_counts")(spark, dir)
+    AggregateQueries.a08.build(spark, dir)
       .createOrReplaceTempView("graft_user_decay")
-    graft.SparkEntry.queries("q65_pattern_match")(spark, dir)
+    RelationalQueries.q65.build(spark, dir)
       .createOrReplaceTempView("graft_conversions")
   }
 
@@ -155,13 +138,13 @@ object GraftViews {
    * | `graft_dup_by_source`   | exact-dup removal rates by source (d19)      | (source, n_docs, n_dup_docs, n_removed, removal_rate) |
    */
   def registerCommunity(spark: SparkSession, dir: String): Unit = {
-    graft.SparkEntry.queries("g10_modularity")(spark, dir)
+    GraphQueries.g10.build(spark, dir)
       .createOrReplaceTempView("graft_partition_score")
-    graft.SparkEntry.queries("g11_lpa_labels")(spark, dir)
+    GraphQueries.g11.build(spark, dir)
       .createOrReplaceTempView("graft_communities")
-    graft.SparkEntry.queries("t31_source_caps")(spark, dir)
+    TextQueries.t31.build(spark, dir)
       .createOrReplaceTempView("graft_source_caps")
-    graft.SparkEntry.queries("d19_dup_by_source")(spark, dir)
+    DedupQueries.d19.build(spark, dir)
       .createOrReplaceTempView("graft_dup_by_source")
   }
 
@@ -185,29 +168,29 @@ object GraftViews {
    * | `graft_span_removal`      | corpus with duplicate spans excised (d24)     | (doc_id, clean_text, n_kept_tokens) |
    */
   def registerDiagnostics(spark: SparkSession, dir: String): Unit = {
-    graft.SparkEntry.queries("g12_ppr")(spark, dir)
+    GraphQueries.g12.build(spark, dir)
       .createOrReplaceTempView("graft_seed_relevance")
-    graft.SparkEntry.queries("t32_lexical_diversity")(spark, dir)
+    TextQueries.t32.build(spark, dir)
       .createOrReplaceTempView("graft_lexical_diversity")
-    graft.SparkEntry.queries("m12_audio_neardup")(spark, dir)
+    MediaQueries.m12.build(spark, dir)
       .createOrReplaceTempView("graft_audio_neardup")
-    graft.SparkEntry.queries("t33_boilerplate")(spark, dir)
+    TextQueries.t33.build(spark, dir)
       .createOrReplaceTempView("graft_boilerplate")
-    graft.SparkEntry.queries("d21_cross_source_leakage")(spark, dir)
+    DedupQueries.d21.build(spark, dir)
       .createOrReplaceTempView("graft_source_leakage")
-    graft.SparkEntry.queries("s18_probe_recall")(spark, dir)
+    SearchQueries.s18.build(spark, dir)
       .createOrReplaceTempView("graft_probe_recall")
-    graft.SparkEntry.queries("e17_cell_balance")(spark, dir)
+    SearchQueries.e17.build(spark, dir)
       .createOrReplaceTempView("graft_cell_balance")
-    graft.SparkEntry.queries("a09_sliding_hll")(spark, dir)
+    AggregateQueries.a09.build(spark, dir)
       .createOrReplaceTempView("graft_sliding_distinct")
-    graft.SparkEntry.queries("d22_survivor_policy")(spark, dir)
+    DedupQueries.d22.build(spark, dir)
       .createOrReplaceTempView("graft_survivor_policy")
-    graft.SparkEntry.queries("d23_minhash_k_curve")(spark, dir)
+    DedupQueries.d23.build(spark, dir)
       .createOrReplaceTempView("graft_minhash_k_curve")
-    graft.SparkEntry.queries("t34_token_fertility")(spark, dir)
+    TextQueries.t34.build(spark, dir)
       .createOrReplaceTempView("graft_token_fertility")
-    graft.SparkEntry.queries("d24_span_removal")(spark, dir)
+    DedupQueries.d24.build(spark, dir)
       .createOrReplaceTempView("graft_span_removal")
   }
 }

@@ -490,7 +490,7 @@ object StreamingIngest {
                                keyCol: String = "event_type",
                                idCol: String = "user_id"): StreamingQuery =
     drain(events, checkpointDir) { (batch, batchId) =>
-      replaceBatchPartition(graft.Queries.hllRegisters(
+      replaceBatchPartition(graft.NorthStar.hllRegisters(
           batch.withColumnRenamed(idCol, "user_id"), Seq(keyCol)),
         storePath, batchId)
       ()
@@ -642,11 +642,11 @@ object StreamingIngest {
     * its schema: the key column is a parameter, so no layout is declared. */
   def distinctView(spark: SparkSession, storePath: String,
                    keyCol: String = "event_type"): DataFrame =
-    graft.Queries.hllEstimate(
+    graft.NorthStar.hllEstimate(
         spark.read.parquet(storePath)
           .groupBy(col(keyCol), col("j")).agg(max(col("m_j")).as("m_j")),
         Seq(keyCol))
-      .select(col(keyCol), graft.Queries.hllHarmonic.as("est_distinct"))
+      .select(col(keyCol), graft.NorthStar.hllHarmonic.as("est_distinct"))
 
   /**
    * Continuously-maintained top-k — the streaming form of q10's batch

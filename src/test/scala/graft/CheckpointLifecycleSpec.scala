@@ -41,7 +41,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
         Seq(1L).toDF("node"), iters = 5).count() == 5)
       // the staged verdicts: one tracked checkpoint per keep-list
       for (q <- Seq("d13_dedup_verdict", "d26_verdict_lm"))
-        assert(NorthStar.queries(q)(spark, dir).count() > 0)
+        assert(SparkEntry.queries(q)(spark, dir).count() > 0)
       // persisted memos: LSH pairs, signature table, source sketch, and
       // the bipartite edge table
       for (q <- Seq("d04_minhash_lsh", "s06_ann_knn_join", "g01_source_sketch",
@@ -116,7 +116,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
       NorthStar.releaseCaches(spark, d)
       val before = rdds
       for (q <- Seq("d03_jaccard_pairs", "d04_minhash_lsh", "g01_source_sketch"))
-        NorthStar.queries(q)(spark, d).count()
+        SparkEntry.queries(q)(spark, d).count()
       rdds -- before
     }
     val smallRdds = populate(small)
@@ -144,8 +144,8 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     // a plain table read and the 0.8 filter view over the persisted 0.6
     // pair table are memos their build did not persist; a caller that
     // caches them owns those caches
-    val read = Queries.t(spark, dir, "region").cache()
-    val view = NorthStar.queries("d03_jaccard_pairs")(spark, dir).cache()
+    val read = NorthStar.t(spark, dir, "region").cache()
+    val view = SparkEntry.queries("d03_jaccard_pairs")(spark, dir).cache()
     assert(read.count() > 0 && view.count() > 0)
     NorthStar.releaseCaches(spark, dir)
     assert(read.storageLevel != StorageLevel.NONE, "release unpersisted a plain read")
@@ -172,7 +172,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     NorthStar.releaseCaches(spark, dir)
     SparkEntry.queries("g09_components")(spark, dir).count()
-    assert(Queries.coOrderEdges(spark, dir, 46).storageLevel != StorageLevel.NONE,
+    assert(NorthStar.coOrderEdges(spark, dir, 46).storageLevel != StorageLevel.NONE,
       "g09 uncached the co-order memo it reads; g11 would rebuild it")
     NorthStar.releaseCaches(spark, dir)
   }

@@ -20,13 +20,16 @@ class ExtensionsSpec extends AnyFunSuite {
   private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   test("harness contract: every query has an oracle, no orphan oracles, no key collisions") {
-    val qk = SparkEntry.queries.keySet
-    val ok = SparkEntry.oracleSql.keySet
-    assert((ok -- qk).isEmpty, s"oracles without queries: ${ok -- qk}")
-    assert((qk -- ok).isEmpty, s"rows-only queries (should be zero): ${qk -- ok}")
-    // Map ++ silently drops duplicates — sizes must add up across tiers
-    assert(qk.size == Queries.parity.size + NorthStar.queries.size,
-      "duplicate query key between parity and north-star tiers")
+    val names = SparkEntry.catalogue.map(_.name)
+    // toMap keeps one entry per key: a duplicate name would vanish silently
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct)}")
+    // a null or empty oracle is a record read before its tier object finished
+    // initializing (a cross-tier cycle), or a query left without its oracle
+    val blank = SparkEntry.catalogue
+      .filter(q => q.oracle == null || q.oracle.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries without oracle SQL: $blank")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("q34 cube: contains the plain group-by rows plus marginals and one grand total") {
@@ -321,7 +324,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("q46 retention: the week-0 cell equals the cohort size") {
     val ret = q("q46_retention").collect()
       .map(r => (r.getTimestamp(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val cohorts = Queries.eventsTable(spark, dir)
+    val cohorts = NorthStar.eventsTable(spark, dir)
       .groupBy(col("user_id")).agg(date_trunc("week", min(col("ts"))).as("cw"))
       .groupBy(col("cw")).count().collect()
       .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
@@ -1119,7 +1122,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("a07 AMS sketch: counters, median-of-means, and exact F2 recompute") {
     val row = q("a07_ams_sketch").collect().head
-    val per = Queries.eventsTable(spark, dir)
+    val per = NorthStar.eventsTable(spark, dir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
       .withColumn("sig", graft.functions.Hashing.fnvMinhashSignature(
         array(col("user_id").cast("string")), 16))
@@ -1233,7 +1236,7 @@ class ExtensionsSpec extends AnyFunSuite {
        "contract against a driver-side event replay") {
     val got = q("q65_pattern_match")
       .select(col("user_id"), col("event_id")).as[(Long, Long)].collect().toSet
-    val events = Queries.eventsTable(spark, dir)
+    val events = NorthStar.eventsTable(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"), col("ts"))
       .as[(Long, Long, String, Long, java.sql.Timestamp)].collect()
@@ -1261,7 +1264,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("a08 decayed counts: exact recompute with power-of-two weights") {
     val got = q("a08_decayed_counts")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r).toMap
-    val events = Queries.eventsTable(spark, dir)
+    val events = NorthStar.eventsTable(spark, dir)
       .select(col("user_id"), col("event_id"),
         to_date(col("ts")).as("d"), col("ts"))
       .as[(Long, Long, java.sql.Date, java.sql.Timestamp)].collect()

@@ -473,7 +473,7 @@ class PiiSpec extends AnyFunSuite {
     // Equal lengths make the value-ASC tiebreak decide: ab@c.dex folds
     // first (wins the span), x@d.efgh's overlapped occurrence leaves the
     // raw residue '@d.efgh'. This order is the cross-engine contract —
-    // NorthStar.pseudoSql realizes the identical length-DESC/value-ASC
+    // OracleSql.pseudoSql realizes the identical length-DESC/value-ASC
     // sort, so the t36/t37/t38 hash gates stay aligned.
     val df = Seq((1L,
       "a ab@c.dex b x@d.efgh c ab@c.dex@d.efgh d")).toDF("doc_id", "text")

@@ -609,16 +609,34 @@ class PlansSpec extends AnyFunSuite {
       "g03_label_centroid_sim",// |labels| centroid rows
       "s07_ann_incremental")   // ~1% arrival batch broadcast vs index
     val dirS = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(boundedByConstruction)
-      .flatMap { name =>
-        nlJoins(SparkEntry.queries(name)(spark, dirS).queryExecution.sparkPlan)
+    // The same sweep is the build census: building a query should only
+    // plan, so each query is built from released caches under the Meter,
+    // and its build may run at most the Spark stages plans/build_stages.tsv
+    // allows it (name, stages). Allowances only go down; the file's keys
+    // are the catalogue's.
+    val swept = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      NorthStar.releaseCaches(spark, dirS)
+      val (df, m) = Meter(spark).measure(name)(SparkEntry.queries(name)(spark, dirS))
+      val nl = if (boundedByConstruction(name)) Seq.empty
+        else nlJoins(df.queryExecution.sparkPlan)
           .filterNot(_.children.exists(hasScalarAgg))
           .map(j => s"$name: ${j.nodeName}")
-      }
+      (name, m.stages.size, nl)
+    }
+    NorthStar.releaseCaches(spark, dirS)
+    val offenders = swept.flatMap(_._3)
     assert(offenders.isEmpty,
       s"nested-loop/cartesian against a non-scalar side:\n${offenders.mkString("\n")}")
-    NorthStar.releaseCaches(spark, dirS)
+    val src = scala.io.Source.fromFile("plans/build_stages.tsv")
+    val allowed = try src.getLines().filterNot(_.startsWith("#")).map { l =>
+      val Array(name, n) = l.split('\t'); name -> n.toInt
+    }.toMap finally src.close()
+    assert(allowed.keySet == SparkEntry.queries.keySet,
+      s"build_stages.tsv keys differ from the catalogue: missing " +
+        s"${SparkEntry.queries.keySet -- allowed.keySet}, stale ${allowed.keySet -- SparkEntry.queries.keySet}")
+    val over = swept.collect { case (name, n, _) if n > allowed(name) =>
+      s"$name: $n stages while built, allowed ${allowed(name)}" }
+    assert(over.isEmpty, s"builds over their stage allowance:\n${over.mkString("\n")}")
   }
 
   test("bounded-window contract: every unpartitioned WindowExec in the " +

@@ -383,7 +383,7 @@ class RelationalSpec extends AnyFunSuite {
         (3L, "delta", "en", "s1", 5L), (5L, "epsilon", "en", "s1", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Queries.all("q60_corpus_diff")(spark, dir)
+    val out = SparkEntry.queries("q60_corpus_diff")(spark, dir)
       .as[(Long, String, Option[String], Option[String])].collect()
       .map(r => r._1 -> ((r._2, r._3.isDefined, r._4.isDefined))).toMap
     assert(out == Map(

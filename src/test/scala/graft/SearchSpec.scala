@@ -24,19 +24,19 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("t13 BM25: zero-score docs drop out, every matching doc scores positive") {
-    val out = NorthStar.queries("t13_bm25_search")(spark, dir)
+    val out = SparkEntry.queries("t13_bm25_search")(spark, dir)
       .select(col("doc_id"), col("score")).as[(Long, Double)].collect().toMap
     assert(out.keySet == Set(0L, 1L, 3L))
     assert(out.values.forall(_ > 0.0))
     // doc 0 carries the rarest term ('dup', df=1) twice in a short doc —
     // highest idf × tf saturation → top rank
-    val top = NorthStar.queries("t13_bm25_search")(spark, dir)
+    val top = SparkEntry.queries("t13_bm25_search")(spark, dir)
       .select(col("doc_id")).as[Long].head()
     assert(top == 0L)
   }
 
   test("t14 BPE merge: adjacent-pair counts, ties broken by pair text") {
-    val out = NorthStar.queries("t14_bpe_merge")(spark, dir)
+    val out = SparkEntry.queries("t14_bpe_merge")(spark, dir)
       .as[(String, Long)].collect().toSeq
     // count-2 pairs: "fast merge" < "merge window" < "window merge"
     assert(out.take(3) == Seq(("fast merge", 2L), ("merge window", 2L),
@@ -45,7 +45,7 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("t16 phrase search: exact adjacent occurrence counts per doc") {
-    val out = NorthStar.queries("t16_phrase_search")(spark, dir)
+    val out = SparkEntry.queries("t16_phrase_search")(spark, dir)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(3L -> 2L))
   }
@@ -58,7 +58,7 @@ class SearchSpec extends AnyFunSuite {
         (1L, "INSERTED-PREFIX-" + base, "en", "s0", base.length + 16L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val chunks = NorthStar.queries("d11_cdc_chunks")(spark, d)
+    val chunks = SparkEntry.queries("d11_cdc_chunks")(spark, d)
       .select(col("doc_id"), col("chunk_hash")).as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val shared = chunks(0L).intersect(chunks(1L))
@@ -71,7 +71,7 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("t21 feature hashing matches a hand-computed reference vector") {
-    val out = NorthStar.queries("t21_feature_hash")(spark, dir)
+    val out = SparkEntry.queries("t21_feature_hash")(spark, dir)
       .as[(Long, String)].collect().toMap
     val texts = Map(0L -> "dup dup merge", 1L -> "merge window merge window merge",
       2L -> "the a of", 3L -> "window fast merge fast merge")
@@ -88,7 +88,7 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("t15 mixing weights: normalized over sources, proportional to sqrt token mass") {
-    val rows = NorthStar.queries("t15_mix_weights")(spark, dir)
+    val rows = SparkEntry.queries("t15_mix_weights")(spark, dir)
       .select(col("source"), col("n_tokens"), col("weight"))
       .as[(String, Long, Double)].collect().toSeq.sortBy(_._1)
     assert(rows.map(_._1) == Seq("s0", "s1"))

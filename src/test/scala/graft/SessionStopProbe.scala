@@ -29,11 +29,11 @@ object SessionStopProbe {
     import spark.implicits._
     // populate one entry of every memo kind, through the real call
     // shapes, and a tracked checkpoint (via a graph operator)
-    require(Queries.t(spark, dir, "region").count() > 0)
-    require(Queries.coOrderEdges(spark, dir, 49).count() >= 0)
-    Queries.supplierPartEdges(spark, dir)
+    require(NorthStar.t(spark, dir, "region").count() > 0)
+    require(NorthStar.coOrderEdges(spark, dir, 49).count() >= 0)
+    NorthStar.supplierPartEdges(spark, dir)
     for (q <- Seq("d03_jaccard_pairs", "d04_minhash_lsh", "g01_source_sketch"))
-      NorthStar.queries(q)(spark, dir)
+      SparkEntry.queries(q)(spark, dir)
     NorthStar.sigTable(spark, dir, 512, 8)
     val lp = operators.Graph.labelPropagation(
       Seq((1L, 2L), (2L, 3L)).toDF("u", "v"), 1)

@@ -187,7 +187,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("e01 block-partitioned all-pairs == naive pair scan, with no cartesian/BNLJ") {
     val dir = "/root/testdata/sf0.001"
-    val res = NorthStar.queries("e01_embedding_neardup")(spark, dir)
+    val res = SparkEntry.queries("e01_embedding_neardup")(spark, dir)
     val got = res.as[(Long, Long, Double)].collect().toSet
     // naive triangular all-pairs ground truth (the formulation e01 replaced)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")

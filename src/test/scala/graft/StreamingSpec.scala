@@ -231,15 +231,15 @@ class StreamingSpec extends AnyFunSuite {
     // the maintained view must equal the one-shot batch sketch over ALL
     // events — register merge is lossless, not approximately-composable
     val all = (b1 ++ b2).toDF("event_type", "user_id")
-    val batch = graft.Queries.hllEstimate(
-        graft.Queries.hllRegisters(all, Seq("event_type")), Seq("event_type"))
+    val batch = graft.NorthStar.hllEstimate(
+        graft.NorthStar.hllRegisters(all, Seq("event_type")), Seq("event_type"))
       .selectExpr("event_type",
         "0.709 * 4096.0 / (sum_present + CAST(64 - n_present AS DOUBLE))")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(streamed == batch, s"streamed=$streamed batch=$batch")
     // a batch's partials written AGAIN under a new batch id (the
     // failure sums cannot tolerate): max-merge absorbs the duplicate
-    graft.Queries.hllRegisters(b2.toDF("event_type", "user_id"), Seq("event_type"))
+    graft.NorthStar.hllRegisters(b2.toDF("event_type", "user_id"), Seq("event_type"))
       .withColumn("_batch_id", lit(99L))
       .write.mode("append").partitionBy("_batch_id").parquet(store)
     val afterDup = StreamingIngest.distinctView(spark, store)
@@ -264,10 +264,10 @@ class StreamingSpec extends AnyFunSuite {
     land("b3.csv", b3); drain()
     val v3 = StreamingIngest.distinctView(spark, store)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val batch3 = graft.Queries.hllEstimate(
-        graft.Queries.hllRegisters((b1 ++ b2 ++ b3).toDF("event_type", "user_id"),
+    val batch3 = graft.NorthStar.hllEstimate(
+        graft.NorthStar.hllRegisters((b1 ++ b2 ++ b3).toDF("event_type", "user_id"),
           Seq("event_type")), Seq("event_type"))
-      .select(col("event_type"), graft.Queries.hllHarmonic.as("e"))
+      .select(col("event_type"), graft.NorthStar.hllHarmonic.as("e"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(v3 == batch3, "post-compaction ingest diverged from the batch sketch")
   }
@@ -276,7 +276,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val store = Files.createTempDirectory("graft_hll_crash").toString
     def writeBatch(id: Long, rows: Seq[(String, Long)]): Unit =
-      graft.Queries.hllRegisters(rows.toDF("event_type", "user_id"), Seq("event_type"))
+      graft.NorthStar.hllRegisters(rows.toDF("event_type", "user_id"), Seq("event_type"))
         .withColumn("_batch_id", lit(id))
         .write.mode("append").partitionBy("_batch_id").parquet(store)
     def view(): Map[String, Double] = StreamingIngest.distinctView(spark, store)
@@ -319,10 +319,10 @@ class StreamingSpec extends AnyFunSuite {
 
     writeBatch(7L, (550L to 800L).map(u => ("view", u)))
     val all = (1L to 800L).map(u => ("view", u)) ++ (1L to 150L).map(u => ("click", u))
-    val batchView = graft.Queries.hllEstimate(
-        graft.Queries.hllRegisters(all.toDF("event_type", "user_id"), Seq("event_type")),
+    val batchView = graft.NorthStar.hllEstimate(
+        graft.NorthStar.hllRegisters(all.toDF("event_type", "user_id"), Seq("event_type")),
         Seq("event_type"))
-      .select(col("event_type"), graft.Queries.hllHarmonic.as("e"))
+      .select(col("event_type"), graft.NorthStar.hllHarmonic.as("e"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     StreamingIngest.compactDistinctStore(spark, store)
     assert(parts() == Seq("_batch_id=-2"), s"fold of {-1, 7}: ${parts()}")
@@ -332,7 +332,7 @@ class StreamingSpec extends AnyFunSuite {
   test("compaction housekeeping: non-numeric partitions skip the fold; stale staging dirs are reaped") {
     import spark.implicits._
     val store = Files.createTempDirectory("graft_hll_housekeep").toString
-    graft.Queries.hllRegisters(
+    graft.NorthStar.hllRegisters(
         (1L to 200L).map(u => ("view", u)).toDF("event_type", "user_id"),
         Seq("event_type"))
       .withColumn("_batch_id", lit(0L))
@@ -1520,7 +1520,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import StreamingIngest.{Conversion, PatternEvent}
     val dir = "/root/testdata/sf0.001"
-    val events = Queries.eventsTable(spark, dir)
+    val events = NorthStar.eventsTable(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .as[PatternEvent].collect().sortBy(e => (e.ts.getTime, e.event_id))
     val batches = events.grouped(math.max(1, events.length / 3)).toSeq
@@ -1666,9 +1666,9 @@ class StreamingSpec extends AnyFunSuite {
           sum(col("value")).as("sum_value")))),
       ("distinct maintenance", StreamingIngest.startDistinctMaintenance(_, _, _),
         store => rows(StreamingIngest.distinctView(spark, store)),
-        rows(graft.Queries.hllEstimate(
-            graft.Queries.hllRegisters(all, Seq("event_type")), Seq("event_type"))
-          .select(col("event_type"), graft.Queries.hllHarmonic.as("est_distinct")))))
+        rows(graft.NorthStar.hllEstimate(
+            graft.NorthStar.hllRegisters(all, Seq("event_type")), Seq("event_type"))
+          .select(col("event_type"), graft.NorthStar.hllHarmonic.as("est_distinct")))))
     for ((name, start, view, expected) <- cases) {
       val root = Files.createTempDirectory("graft_empty_first").toString
       val landing = s"$root/landing"; val store = s"$root/store"; val ckpt = s"$root/ckpt"

@@ -142,7 +142,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       (4L, "fast join fast join", "en", "s1", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = NorthStar.queries("t27_quality_classifier")(spark, dir)
+    val out = SparkEntry.queries("t27_quality_classifier")(spark, dir)
       .as[(Long, Long, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     // reference arithmetic recomputed from the public FNV-1a definition
@@ -180,7 +180,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       (3L, "d e f", "en", "s1", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = NorthStar.queries("t28_corpus_datasheet")(spark, dir)
+    val out = SparkEntry.queries("t28_corpus_datasheet")(spark, dir)
       .as[(String, Long, Long, Double, String, Double)].collect()
       .map(r => r._1 -> r).toMap
     assert(out("s0") == (("s0", 3L, 5L, 1.0 - 2.0 / 3.0, "en", 2.0 / 3.0)))
